@@ -87,9 +87,12 @@ object CandidateTransform {
       rightCols = Seq("beam_id"))
       .drop("cand.beam_key", "cand.coherent_key", "cand.observed_at_rounded",
         "cand.beam", "cand.coherent")
-    val out = joined.cache()
-    // Both reference invariants from ONE action over the cached frame
-    // (row count + null-beam count), not two.
+    // Eager boundary (lineage truncation, as in ObservationTransform):
+    // the invariant check and every downstream consumer read the
+    // materialized join instead of re-planning the as-of subtree.
+    val out = joined.localCheckpoint(true)
+    // Both reference invariants from ONE action over the checkpointed
+    // frame (row count + null-beam count), not two.
     val stats = out.agg(
       count(lit(1)).as("n"),
       count(when(c("beam_id").isNull, 1)).as("nulls")).head()

@@ -1993,12 +1993,12 @@ object TextQueries {
     * (eager stage checkpoints, novelty/decontaminate probes, stats), so
     * a bare `repartition` would re-run the full-table exchange once PER
     * consuming action (measured r17→r18: +26-63% on q82/q87/q114).
-    * Spread variants were measured in isolation (OPTIMIZATION_r18.md);
-    * the plain scan won: downstream stage parallelism recovers at the
-    * first shuffle each pipeline stage already performs, so the extra
-    * exchange buys nothing here. A production corpus is a many-file
-    * directory where the scan parallelizes by itself (guide §2.5 fixes
-    * input skew at the source).
+    * So the spread is paid ONCE: one round-robin exchange to
+    * `defaultParallelism` partitions, materialized by an eager
+    * `localCheckpoint` that every consuming action then reads as a
+    * LogicalRDD leaf (no re-scan, no re-exchange, lineage cut at the
+    * load). A production corpus is a many-file directory where the scan
+    * parallelizes by itself; there the exchange only rebalances.
     */
   private def spreadDocs(s: SparkSession, dir: String): DataFrame =
     Tables(s, dir, "documents")

@@ -32,6 +32,41 @@ class CliSpec extends SparkSuite {
       "cands_per_obs_max", "corrupt_run_summaries", "quarantined_spccl"))
   }
 
+  /** One `--out` run whose result frames the specs below re-use AFTER the
+    * run has written them and emitted its metrics.
+    */
+  private lazy val written = graft.meertrap.Main.run(spark, graft.meertrap.Main.Args(
+    input = graft.meertrap.FixtureGen.generate().toString, partitionKey = "2023-11-20",
+    out = Some(Files.createTempDirectory("meertrap_cli_written").toString)))
+
+  private def writtenFrames = Seq(
+    "observation" -> written.observation.obs, "beam" -> written.observation.beam,
+    "candidate" -> written.candidates,
+    "corrupt_run_summaries" -> written.corruptRunSummaries,
+    "quarantined_spccl" -> written.quarantinedSpccl)
+
+  test("meertrap CLI: written output frames plan over stage leaves, not cached subtrees") {
+    // Lineage guard: a `.cache()` stage mark embeds every upstream stage in
+    // each consumer's plan (the plan doubled per stage and dominated the
+    // ingest). The bound is the boundaries' measured maximum (25 nodes,
+    // the candidate frame) with 2x headroom; never loosen it.
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    writtenFrames.foreach { case (name, df) =>
+      val plan = df.queryExecution.optimizedPlan
+      assert(plan.collectWithSubqueries { case m: InMemoryRelation => m }.isEmpty,
+        s"$name plans over a cached stage")
+      val nodes = plan.collectWithSubqueries { case p => p }.size
+      assert(nodes <= 50, s"$name optimized plan has $nodes nodes")
+    }
+  }
+
+  test("meertrap CLI: output frames answer further actions after write and metrics") {
+    (writtenFrames :+ ("wide" -> written.observation.wide)).foreach { case (name, df) =>
+      val n = df.count()
+      assert(df.collect().length.toLong === n, name)
+    }
+  }
+
   test("meertrap CLI: --partition-key narrows to the partition subdirectory when present") {
     // two partition dirs, each a full fixture; a keyed run must only see
     // its own partition's candidates
