@@ -62,7 +62,6 @@ object Frames {
     * never free blocks a live query still needs.
     */
   def sweepRddBlocksAfterNextAction(spark: SparkSession): Unit = {
-    org.apache.spark.GraftSparkShim.drainListenerBus(spark.sparkContext)
     // CHECKPOINTED RDDs only. SQL-cache column buffers also live in
     // getPersistentRDDs, but those belong to CacheManager entries: an
     // RDD-level unpersist would leave the entry alive with a dead
@@ -75,6 +74,9 @@ object Frames {
     val snapshot = spark.sparkContext.getPersistentRDDs
       .filter(_._2.isCheckpointed).keySet.toSet
     if (snapshot.isEmpty) return
+    // Drain only when a listener will be registered: a build that
+    // checkpointed nothing pays no listener-bus wait.
+    org.apache.spark.GraftSparkShim.drainListenerBus(spark.sparkContext)
     val listener = new QueryExecutionListener {
       override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
         sweep()

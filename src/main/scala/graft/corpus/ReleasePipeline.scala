@@ -97,7 +97,8 @@ object ReleasePipeline {
       afterParaHash: Long = -1L) // -1 only on legacy constructions
 
   /** `corpus`: the surviving (id, text) stream (text fully scrubbed);
-    * `packed`: its packing assignment at `packCapacity`; `minhashSig`:
+    * `packed`: its packing assignment at `packCapacity`, built on FIRST
+    * ACCESS (see [[Result.packed]]); `minhashSig`:
     * the (id, sig, fp) REGISTRY frame ([[registryOf]]) stage 3 computed
     * over the exact-dedup survivors (lazily persisted —
     * [[appendBatch]] and [[ReleaseDiff]] diff future candidate batches
@@ -110,10 +111,19 @@ object ReleasePipeline {
     * parity harnesses reuse the pairs rather than re-running the window
     * split + pair search — see the q82 gate).
     */
-  final case class Result(corpus: DataFrame, packed: DataFrame,
+  final class Result(val corpus: DataFrame, packedFn: => DataFrame,
       statsFn: () => Stats,
-      minhashSig: DataFrame, paraPairs: Option[DataFrame] = None,
-      budgeted: Option[DataFrame] = None) {
+      val minhashSig: DataFrame, val paraPairs: Option[DataFrame] = None,
+      val budgeted: Option[DataFrame] = None) {
+    /** Stage 7's packing assignment, MATERIALIZED ON FIRST ACCESS and
+      * memoized: [[Packing.packChunks]] runs two eager probe jobs (the
+      * bucket-boundary quantiles and the per-bucket subtotals) that no
+      * caller which only consumes `corpus` should pay for. The probes
+      * read the checkpointed survivors, so a harness-wrapped query must
+      * force `packed` during its construction, before the consuming
+      * action (whose completion sweeps the stage blocks).
+      */
+    lazy val packed: DataFrame = packedFn
     /** Stage survivor counts, computed on FIRST ACCESS (r18): each count
       * is one job over a checkpointed stage frame, ~10 jobs per run() —
       * pure overhead for the many callers (every release-family query)
@@ -321,7 +331,7 @@ object ReleasePipeline {
     // 7. Packing assignment over the survivors.
     val sized = kept.select(col("doc_id"),
       graft.functions.TextFns.tokenCount(col("text")).cast("long").as("len"))
-    val packed = Packing.packChunks(sized, "doc_id", "len", cfg.packCapacity)
+    lazy val packed = Packing.packChunks(sized, "doc_id", "len", cfg.packCapacity)
 
     val stats = () => {
       val inputN = input.count()
@@ -351,7 +361,7 @@ object ReleasePipeline {
       f(kept.withColumn("n_tokens",
         graft.functions.TextFns.tokenCount(col("text")).cast("long")))
     }
-    Result(kept, packed, stats, sig, paraPairs, budgeted)
+    new Result(kept, packed, stats, sig, paraPairs, budgeted)
   }
 
   /** Shared stage 6 / a7 body: unigram-LM mean-logprob quantile floor
@@ -387,8 +397,19 @@ object ReleasePipeline {
     * stages dropped: greedy incremental dedup compares a new doc against
     * everything previously SEEN at the dedup stage, which is what makes
     * chained appends equal a one-shot append (see [[appendBatch]]).
+    *
+    * `corpus` is held LAZILY (evaluated on first access, then memoized):
+    * [[AppendResult.toPrior]] hands the next append a corpus whose batch
+    * tail is not built yet, and an append that never reads its prior's
+    * corpus must not build it.
     */
-  final case class PriorRelease(corpus: DataFrame, minhashSig: DataFrame)
+  final class PriorRelease(corpusFn: => DataFrame, val minhashSig: DataFrame) {
+    lazy val corpus: DataFrame = corpusFn
+  }
+  object PriorRelease {
+    def apply(corpus: => DataFrame, minhashSig: DataFrame): PriorRelease =
+      new PriorRelease(corpus, minhashSig)
+  }
 
   /** Registry rows `(id, sig, fp)` over a `(doc_id, text)` frame: the
     * MinHash signature (near-dup identity) and normalized-text
@@ -419,40 +440,60 @@ object ReleasePipeline {
       afterDecontaminate: Long,
       afterLmFloor: Long)
 
-  /** `newKept`: the batch docs that survive every stage (id, text —
-    * despanned/scrubbed); `corpus`: prior ∪ newKept (the prior side is a
-    * LAZY union — consuming only `newKept` never scans the prior
-    * release); `packedNew`: packing assignment over the new survivors
-    * only (released packs are immutable — repacking the whole corpus
-    * would invalidate shipped shard boundaries); `dedupSurvivors`: the
-    * batch ids surviving the dedup boundary (quality → exact →
-    * near-dup, BEFORE the batch-relative paragraph stage), the surface
+  /** One [[appendBatch]]'s output, in two parts.
+    *
+    * BUILT WHEN THE CALL RETURNS — the dedup boundary:
+    * `dedupSurvivors`: the batch ids surviving quality → exact →
+    * near-dup (BEFORE the batch-relative paragraph stage), the surface
     * on which chained == one-shot parity holds exactly; `minhashSig`:
     * the chained registry for the NEXT append (prior registry ∪ this
     * batch's post-exact-dedup signatures); `registryNew`: just this
     * batch's registry contribution (minhashSig minus the prior part) —
     * what an append-only registry STORE persists per batch
-    * ([[graft.streaming.StreamingReleaseAppend]]); `cached`: pipeline-internal
-    * persisted frames (the batch signature) — the CorpusPipeline
-    * convention: the caller unpersists these when done (recomputation
-    * stays correct afterwards, the lineage roots are checkpointed
-    * stages).
+    * ([[graft.streaming.StreamingReleaseAppend]]); `cached`:
+    * pipeline-internal persisted frames (the batch signature) — the
+    * CorpusPipeline convention: the caller unpersists these when done
+    * (recomputation stays correct afterwards, the lineage roots are
+    * checkpointed stages).
+    *
+    * MATERIALIZED ON FIRST ACCESS — the batch-relative tail (paragraph
+    * near-dup, dup-span removal, decontamination, LM floor) and the
+    * packing, each run once and memoized: `newKept`: the batch docs that
+    * survive every stage (id, text — despanned/scrubbed); `corpus`:
+    * prior ∪ newKept (the prior side is a LAZY union — consuming only
+    * `newKept` never scans the prior release); `packedNew`: packing
+    * assignment over the new survivors only (released packs are
+    * immutable — repacking the whole corpus would invalidate shipped
+    * shard boundaries; reading `newKept` does not run the packing
+    * probes); `stats`. [[toPrior]] forces none of them, so an append
+    * consumed only at its dedup boundary (a chained parity check) never
+    * builds its tail. The first access runs the tail's eager jobs over
+    * the dedup-boundary checkpoint, so a harness-wrapped query must
+    * force every member it reads during its construction, before the
+    * consuming action (whose completion sweeps the stage blocks). With
+    * `checkpointDir` the tail (not the packing) is forced before
+    * [[appendBatch]] returns.
     */
-  final case class AppendResult(
-      newKept: DataFrame,
-      corpus: DataFrame,
-      packedNew: DataFrame,
-      dedupSurvivors: DataFrame,
-      minhashSig: DataFrame,
-      registryNew: DataFrame,
+  final class AppendResult(
+      newKeptFn: => DataFrame,
+      corpusFn: => DataFrame,
+      packedNewFn: => DataFrame,
+      val dedupSurvivors: DataFrame,
+      val minhashSig: DataFrame,
+      val registryNew: DataFrame,
       statsFn: () => AppendStats,
-      cached: Seq[DataFrame] = Nil) {
+      val cached: Seq[DataFrame] = Nil) {
+    lazy val newKept: DataFrame = newKeptFn
+    lazy val corpus: DataFrame = corpusFn
+    lazy val packedNew: DataFrame = packedNewFn
     /** Stage survivor counts, computed on FIRST ACCESS (the
       * [[Result.stats]] convention — ~9 count jobs per append that only
-      * stat-reading callers pay).
+      * stat-reading callers pay; reading them also builds the tail).
       */
     lazy val stats: AppendStats = statsFn()
-    /** The grown release as the NEXT append's frozen prior. */
+    /** The grown release as the NEXT append's frozen prior; its corpus
+      * stays unbuilt until that append's caller reads it.
+      */
     def toPrior: PriorRelease = PriorRelease(corpus, minhashSig)
   }
 
@@ -469,7 +510,13 @@ object ReleasePipeline {
     * the corpus text. Appending 1 TB to a 100 TB release costs
     * O(batch) work plus one band-bucket join against the registry;
     * `prior.corpus` is touched only if the caller consumes
-    * `AppendResult.corpus`. Gram-level novelty vs the prior TEXT
+    * `AppendResult.corpus` — also when the prior is a previous append's
+    * `toPrior`, whose tail is then never built. The call itself
+    * materializes the batch only through the dedup boundary (a1–a4 and
+    * the batch registry); the batch-relative tail and the packing run
+    * on first access to [[AppendResult]]'s lazy members, which a
+    * harness-wrapped query must read before its consuming action.
+    * Gram-level novelty vs the prior TEXT
     * (run()'s stage-0 `noveltyRef`) is deliberately absent here — it
     * would re-scan the release; callers who can afford that pass the
     * prior corpus to [[run]]'s noveltyRef instead.
@@ -502,7 +549,9 @@ object ReleasePipeline {
     *
     * `checkpointDir` gives the same durable stage-resume as [[run]]
     * (manifest-guarded, `_SUCCESS`-gated); stage names are `a*`-prefixed
-    * so a dir can never mix full-build and append stages.
+    * so a dir can never mix full-build and append stages. In that mode
+    * the tail is forced before the call returns, so every stage dir
+    * a1–a7 exists as soon as it does.
     */
   def appendBatch(prior: PriorRelease, batch: DataFrame, benchmark: DataFrame,
                   cfg: Config = Config(),
@@ -603,10 +652,13 @@ object ReleasePipeline {
       exact.join(drops, exact("doc_id") === drops("id"), "left_anti")
     })
 
+    // Below the dedup boundary every stage is a lazy val: built once,
+    // on FIRST ACCESS to the AppendResult members that read it.
+
     // 3b-analogue. Paragraph near-dup within the batch (greedy, same
     // drop rule). Prior-vs-batch paragraph overlap would need the prior
     // TEXT — out of the sig-only contract, documented above.
-    val paraDeduped =
+    lazy val paraDeduped =
       if (!cfg.paragraphDedup) deduped
       else fused("a4b_paradedup", {
         val paras = Paragraphs.splitTokenWindows(deduped, "text", "doc_id",
@@ -620,11 +672,11 @@ object ReleasePipeline {
       })
 
     // 5–7. Batch-relative tail: span scrub, decontamination, LM floor.
-    val despanned = fused("a5_despan", TextStats.removeDupSpans(
+    lazy val despanned = fused("a5_despan", TextStats.removeDupSpans(
         paraDeduped, "text", "doc_id", k = cfg.spanK)
       .where(col("n_kept") > 0)
       .select(col("id").as("doc_id"), col("scrubbed").as("text")))
-    val clean = staged("a6_decontaminate", Decontaminate.clean(
+    lazy val clean = staged("a6_decontaminate", Decontaminate.clean(
       despanned, "text", "doc_id",
       benchmark.where(col(s"`${cfg.textCol}`").isNotNull)
         .select(col(s"`${cfg.textCol}`").as("text")), "text",
@@ -632,12 +684,15 @@ object ReleasePipeline {
     // Same no-token degenerate-case guard as run()'s stage 6: a batch
     // that dedups to nothing (a fully re-delivered crawl) must return an
     // empty newKept, not crash training the floor model.
-    val kept = staged("a7_lmfloor", lmFloor(clean, cfg))
+    lazy val kept = staged("a7_lmfloor", lmFloor(clean, cfg))
+    // Durable mode keeps its resume contract: every stage dir exists
+    // once the call returns.
+    checkpointDir.foreach(_ => kept)
 
     // 8. Pack the NEW survivors only; released packs stay as shipped.
-    val sized = kept.select(col("doc_id"),
+    lazy val sized = kept.select(col("doc_id"),
       graft.functions.TextFns.tokenCount(col("text")).cast("long").as("len"))
-    val packed = Packing.packChunks(sized, "doc_id", "len", cfg.packCapacity)
+    lazy val packed = Packing.packChunks(sized, "doc_id", "len", cfg.packCapacity)
 
     val stats = () => {
       val dedupN = paraDeduped.count()
@@ -657,12 +712,11 @@ object ReleasePipeline {
     // Combined corpus under the Result convention (doc_id, text) —
     // [[PriorRelease]].corpus carries the same names, so chained appends
     // and run()-built priors compose without renames.
-    val combined = prior.corpus.select(col("doc_id"), col("text"))
-      .unionByName(kept.select(col("doc_id"), col("text")))
-    AppendResult(
-      newKept = kept,
-      corpus = combined,
-      packedNew = packed,
+    new AppendResult(
+      newKeptFn = kept,
+      corpusFn = prior.corpus.select(col("doc_id"), col("text"))
+        .unionByName(kept.select(col("doc_id"), col("text"))),
+      packedNewFn = packed,
       dedupSurvivors = deduped.select("doc_id"),
       minhashSig = prior.minhashSig.unionByName(sigBatch),
       registryNew = sigBatch,

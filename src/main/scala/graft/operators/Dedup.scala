@@ -243,7 +243,7 @@ object Dedup {
     * @return (id_left, id_right, est_jaccard)
     */
   def minhashLshPairsBetween(
-      left: DataFrame, right: DataFrame,
+      left: DataFrame, right: => DataFrame,
       textCol: String, idCol: String,
       shingleN: Int = 3,
       numHashes: Int = 64,
@@ -258,7 +258,8 @@ object Dedup {
     // against a 100 TB prior corpus by joining the prior's RETAINED
     // signature frame instead of re-scanning its text (same contract as
     // minhashLshPairs' precomputedSig; side membership follows the sig
-    // frame when supplied).
+    // frame when supplied). `right` is by-name: with precomputedSigRight
+    // it is never evaluated, so a lazily-held prior corpus stays unbuilt.
     val bl = bandBuckets(
       precomputedSigLeft.getOrElse(
         minhashSignaturesGen(left, idCol, textCol, shingleN, numHashes)),

@@ -2025,7 +2025,12 @@ object TextQueries {
     // a user pays for. The chained two-append construction exists only to
     // verify split-invariance, so it lives on the GATE side of the bench's
     // serving/gate split (r9 bench-hygiene finding: benching both passes
-    // as "serving" overstated single-append cost ~2x).
+    // as "serving" overstated single-append cost ~2x). An append builds
+    // its post-dedup tail on first access: reading `one.newKept` here,
+    // during construction, builds the serving tail before the consuming
+    // action; the gate's chained appends are read only at their dedup
+    // boundary (and `r1.toPrior` never reads r1's corpus), so their
+    // tails and packing are never built.
     val one = ReleasePipeline.appendBatch(prior, batchAll, bench, cfg)
     val out0 = one.newKept.select(col("doc_id"),
       TextFns.tokenCount(col("text")).cast("long").as("n_tokens"))

@@ -20,6 +20,25 @@ class ReleaseAppendSpec extends SparkSuite {
   }
   private def ids(df: org.apache.spark.sql.DataFrame, c: String = "doc_id") =
     df.select(col(c).cast("long")).as[Long].collect().toSet
+  /** Spark jobs submitted while `f` runs (the listener bus is drained
+    * on both sides, so no earlier job leaks in and none of `f`'s is
+    * missed).
+    */
+  private def jobsDuring(f: => Any): Int = {
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        n.incrementAndGet()
+    }
+    org.apache.spark.GraftSparkShim.drainListenerBus(spark.sparkContext)
+    spark.sparkContext.addSparkListener(l)
+    try {
+      f
+      org.apache.spark.GraftSparkShim.drainListenerBus(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(l)
+    n.get
+  }
 
   test("chained appends equal one one-shot append on the dedup boundary, registry included") {
     val docs = Tables(spark, sf("sf0.001"), "documents")
@@ -42,6 +61,58 @@ class ReleaseAppendSpec extends SparkSuite {
       === ids(one.dedupSurvivors))
     // ...and the SAME registry handed to the next append
     assert(ids(r2.minhashSig, "id") === ids(one.minhashSig, "id"))
+  }
+
+  test("an append builds its post-dedup tail and packing only when read, once") {
+    val docs = Tables(spark, sf("sf0.001"), "documents")
+      .where(col("text").isNotNull)
+    val bench = docs.where(pmod(col("doc_id"), lit(97)) === 0)
+    val prior = priorOf(docs.where(pmod(col("doc_id"), lit(7)) === 0))
+    val batch = docs.where(pmod(col("doc_id"), lit(7)) =!= 0 &&
+      pmod(col("doc_id"), lit(97)) =!= 0)
+    val mid = batch.agg(expr("approx_percentile(doc_id, 0.5)")).head().getLong(0)
+
+    val r1 = ReleasePipeline.appendBatch(prior,
+      batch.where(col("doc_id") <= mid), bench)
+    assert(ids(r1.dedupSurvivors).nonEmpty)
+    val r2 = ReleasePipeline.appendBatch(r1.toPrior,
+      batch.where(col("doc_id") > mid), bench)
+    assert(ids(r2.dedupSurvivors).nonEmpty)
+    // r2 was built over r1.toPrior without building r1's tail: the first
+    // read of r1.newKept runs it...
+    assert(jobsDuring(r1.newKept) > 0)
+    // ...exactly once
+    assert(jobsDuring(r1.newKept) === 0)
+    // reading newKept ran no packing probe: they run on the first read
+    // of packedNew, once
+    assert(jobsDuring(r1.packedNew) > 0)
+    assert(jobsDuring(r1.packedNew) === 0)
+  }
+
+  test("lazy append members honour the DataFrame contract: count then collect agree") {
+    val docs = Tables(spark, sf("sf0.001"), "documents")
+      .where(col("text").isNotNull)
+    val bench = docs.where(pmod(col("doc_id"), lit(97)) === 0)
+    val prior = priorOf(docs.where(pmod(col("doc_id"), lit(7)) === 0))
+    val batch = docs.where(pmod(col("doc_id"), lit(7)) =!= 0 &&
+      pmod(col("doc_id"), lit(97)) =!= 0)
+    def check(res: ReleasePipeline.AppendResult): Unit =
+      Seq("newKept" -> res.newKept, "corpus" -> res.corpus,
+          "packedNew" -> res.packedNew).foreach { case (name, df) =>
+        val n = df.count()
+        assert(n > 0L, name)
+        assert(df.collect().length.toLong === n, name)
+        assert(df.count() === n, name)
+      }
+
+    // tail forced right after the call
+    check(ReleasePipeline.appendBatch(prior, batch, bench))
+    // tail forced only after other actions ran on the built members
+    val late = ReleasePipeline.appendBatch(prior, batch, bench)
+    assert(late.dedupSurvivors.count() > 0L)
+    assert(late.minhashSig.count() > 0L)
+    check(late)
+    assert(late.packedNew.count() === late.newKept.count())
   }
 
   test("frozen prior: corpus grows monotonically and no surviving cross near-dup remains") {
