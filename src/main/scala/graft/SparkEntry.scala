@@ -20,9 +20,9 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("q03_join_chain")(spark, "/root/testdata/sf0.001")
 
-  /** Each query registers the engine's native functions on the caller's
-    * session first (idempotent) — the driver may pass a session it built
-    * itself rather than one from [[Sessions.builder]].
+  /** Each query passes the caller's session through [[Sessions.init]]
+    * first — the driver may pass a session it built itself rather than one
+    * from [[Sessions.builder]]; on a graft session that is a no-op.
     */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     (RelationalQueries.defs ++ EventQueries.defs ++ TextQueries.all ++

@@ -46,23 +46,14 @@ object Sessions {
         s"${System.getProperty("java.io.tmpdir")}/graft-warehouse")
       .config("spark.ui.enabled", "false")
 
-  /** Register the engine's native SQL functions (hms_to_deg, dms_to_deg,
-    * vec_dot) on a freshly built session. Every entry point calls this.
+  /** Makes `spark` a graft session: the catalogue functions and the as-of
+    * strategy that [[GraftExtensions]] injects when a session is built.
+    * A no-op on a [[builder]] session or a second call; on a session built
+    * elsewhere it adds only what is missing (see [[GraftExtensions.ensure]]).
+    * Every entry point calls this once per session or per query build.
     */
   def init(spark: SparkSession): SparkSession = {
-    graft.functions.CoordExpressions.register(spark)
-    graft.functions.VectorExpressions.register(spark)
-    graft.functions.NGramGenerator.register(spark)
-    graft.functions.SketchExpressions.register(spark)
-    graft.functions.TextMetricsExpr.register(spark)
-    graft.functions.HtmlTextExpr.register(spark)
-    graft.functions.HtmlLinksExpr.register(spark)
-    graft.functions.RobotsExpr.register(spark)
-    graft.functions.CompressExpr.register(spark)
-    graft.functions.TextRepairExpr.register(spark)
-    graft.functions.LangIdExpr.register(spark)
-    graft.functions.HttpDecodeExpr.register(spark)
-    spark.experimental.extraStrategies = Seq(graft.plans.AsOfJoinStrategy)
+    GraftExtensions.ensure(spark)
     spark
   }
 }

@@ -90,7 +90,6 @@ object CrawlPipeline {
     */
   def pageDocsFromRecords(records: DataFrame,
                docId: Column = xxhash64(col("record_id"))): DataFrame = {
-    graft.functions.HttpDecodeExpr.register(records.sparkSession)
     // Wire-unwrap order is the reverse of wire-apply order: dechunk
     // (Transfer-Encoding frames the outermost layer — charset-decoding
     // hex size lines as content shreds the page), then Content-Encoding

@@ -192,44 +192,9 @@ object ReleasePipeline {
         input.join(redundant, id === redundant("id"), "left_anti")
     }
 
-    // Each stage boundary below is an EAGER localCheckpoint, for two
-    // compounding reasons. (1) Reuse: later stages, the eager edge
-    // collects, and the stage-count stats each consume the frame again —
-    // without materialization every consumer re-runs the whole upstream
-    // cascade (LSH + span index + paragraph routing several times over).
-    // (2) Lineage truncation: a persist alone leaves each stage's plan
-    // EMBEDDED in the next one's, and stages that reference their input
-    // twice (every join-with-derived-drop-set here) DOUBLE the plan tree
-    // per stage — by stage 7 the driver spends minutes stringifying
-    // exponential plan trees for listener events, dwarfing execution.
-    // localCheckpoint cuts the subtree to a leaf: plans stay O(stage),
-    // which is also what keeps Catalyst/AQE planning time bounded on a
-    // real cluster. Blocks free when the frames are GC'd.
-    //
-    // With `checkpointDir` the boundary is DURABLE parquet instead
-    // (read-or-compute): same reuse and lineage truncation, plus a
-    // crashed run resumes from its last completed stage. The stage body
-    // is by-name so a resumed stage skips its eager work (the CC edge
-    // collects, the LM cut) entirely.
-    def staged(name: String, df: => DataFrame): DataFrame =
-      checkpointDir match {
-        case Some(d) =>
-          graft.sources.Checkpoint.readOrCompute(docs.sparkSession, s"$d/$name")(df)
-        case None => df.localCheckpoint(true)
-      }
-    // Single-consumer boundaries (r18): with the stats counts now lazy,
-    // some stage frames have exactly ONE live consumer — the next stage.
-    // Materializing those buys no reuse and costs a full job + block
-    // round-trip each, so the in-memory path fuses them into the next
-    // stage's materialization (plan depth stays O(2 stages) — the next
-    // boundary truncates). The DURABLE path keeps every boundary: resume
-    // granularity is the point there.
-    def fused(name: String, df: => DataFrame): DataFrame =
-      checkpointDir match {
-        case Some(d) =>
-          graft.sources.Checkpoint.readOrCompute(docs.sparkSession, s"$d/$name")(df)
-        case None => df
-      }
+    // Stage boundaries: see [[Boundaries]].
+    val boundaries = new Boundaries(docs.sparkSession, checkpointDir)
+    import boundaries.{fused, staged}
 
     // 1. PII scrub — pure projection, row count unchanged.
     val scrubbed = staged("1_scrub", acquired.select(id.as("doc_id"),
@@ -564,20 +529,8 @@ object ReleasePipeline {
       checkOrWriteManifest(spark, d,
         appendManifest(cfg, input, benchmark, prior))
     }
-    def staged(name: String, df: => DataFrame): DataFrame =
-      checkpointDir match {
-        case Some(d) =>
-          graft.sources.Checkpoint.readOrCompute(spark, s"$d/$name")(df)
-        case None => df.localCheckpoint(true)
-      }
-    // Single-consumer boundaries fuse forward on the in-memory path —
-    // the run() convention (see the `fused` doc there).
-    def fused(name: String, df: => DataFrame): DataFrame =
-      checkpointDir match {
-        case Some(d) =>
-          graft.sources.Checkpoint.readOrCompute(spark, s"$d/$name")(df)
-        case None => df
-      }
+    val boundaries = new Boundaries(spark, checkpointDir)
+    import boundaries.{fused, staged}
 
     require(prior.minhashSig.columns.contains("fp"),
       "appendBatch: the prior registry must carry (id, sig, fp) rows — " +
@@ -731,12 +684,7 @@ object ReleasePipeline {
     */
   private[graft] def appendManifest(cfg: Config, input: DataFrame,
       benchmark: DataFrame, prior: PriorRelease): String = {
-    def fp(df: DataFrame, c: String): String = {
-      val r = df.agg(count(lit(1)), coalesce(expr(s"bit_xor(xxhash64(`$c`))"), lit(0L))).head()
-      s"${r.getLong(0)}:${r.getLong(1)}"
-    }
     val b = benchmark.where(col(s"`${cfg.textCol}`").isNotNull)
-    def esc(s: String) = s.replace("\\", "\\\\").replace("\"", "\\\"")
     s"""{"mode": "append",
        | "config": "${esc(cfg.toString)}",
        | "input": "${fp(input, cfg.idCol)}",
@@ -758,20 +706,70 @@ object ReleasePipeline {
     */
   private[graft] def manifest(cfg: Config, input: DataFrame,
       benchmark: DataFrame, noveltyRef: Option[DataFrame]): String = {
-    def fp(df: DataFrame, c: String): String = {
-      val r = df.agg(count(lit(1)), coalesce(expr(s"bit_xor(xxhash64(`$c`))"), lit(0L))).head()
-      s"${r.getLong(0)}:${r.getLong(1)}"
-    }
     val b = benchmark.where(col(s"`${cfg.textCol}`").isNotNull)
     val n = noveltyRef
       .map(r => fp(r.where(col(s"`${cfg.textCol}`").isNotNull), cfg.textCol))
       .getOrElse("none")
-    def esc(s: String) = s.replace("\\", "\\\\").replace("\"", "\\\"")
     // One key per line: the mismatch error is diffable by eye.
     s"""{"config": "${esc(cfg.toString)}",
        | "input": "${fp(input, cfg.idCol)}",
        | "benchmark": "${fp(b, cfg.textCol)}",
        | "noveltyRef": "$n"}""".stripMargin
+  }
+
+  /** Manifest fingerprint of `df`: its row count and the xor of
+    * xxhash64 over column `c`.
+    */
+  private def fp(df: DataFrame, c: String): String = {
+    val r = df.agg(count(lit(1)), coalesce(expr(s"bit_xor(xxhash64(`$c`))"), lit(0L))).head()
+    s"${r.getLong(0)}:${r.getLong(1)}"
+  }
+
+  /** JSON string escape for manifest values. */
+  private def esc(s: String) = s.replace("\\", "\\\\").replace("\"", "\\\"")
+
+  /** The stage boundaries of one [[run]] or [[appendBatch]] build.
+    *
+    * Each `staged` boundary is an EAGER localCheckpoint, for two
+    * compounding reasons. (1) Reuse: later stages, the eager edge
+    * collects, and the stage-count stats each consume the frame again —
+    * without materialization every consumer re-runs the whole upstream
+    * cascade (LSH + span index + paragraph routing several times over).
+    * (2) Lineage truncation: a persist alone leaves each stage's plan
+    * EMBEDDED in the next one's, and stages that reference their input
+    * twice (every join-with-derived-drop-set here) DOUBLE the plan tree
+    * per stage — by stage 7 the driver spends minutes stringifying
+    * exponential plan trees for listener events, dwarfing execution.
+    * localCheckpoint cuts the subtree to a leaf: plans stay O(stage),
+    * which is also what keeps Catalyst/AQE planning time bounded on a
+    * real cluster. Blocks free when the frames are GC'd.
+    *
+    * Single-consumer boundaries (`fused`): with the stats counts lazy,
+    * some stage frames have exactly ONE live consumer — the next stage.
+    * Materializing those buys no reuse and costs a full job + block
+    * round-trip each, so the in-memory path fuses them into the next
+    * stage's materialization (plan depth stays O(2 stages) — the next
+    * boundary truncates).
+    *
+    * With `checkpointDir` every boundary, `fused` ones included, is
+    * DURABLE parquet instead (read-or-compute): same reuse and lineage
+    * truncation, plus a crashed run resumes from its last completed
+    * stage — resume granularity is the point there. The stage body is
+    * by-name so a resumed stage skips its eager work (the CC edge
+    * collects, the LM cut) entirely.
+    */
+  private final class Boundaries(spark: org.apache.spark.sql.SparkSession,
+                                 checkpointDir: Option[String]) {
+    def staged(name: String, df: => DataFrame): DataFrame =
+      checkpointDir match {
+        case Some(d) => graft.sources.Checkpoint.readOrCompute(spark, s"$d/$name")(df)
+        case None => df.localCheckpoint(true)
+      }
+    def fused(name: String, df: => DataFrame): DataFrame =
+      checkpointDir match {
+        case Some(d) => graft.sources.Checkpoint.readOrCompute(spark, s"$d/$name")(df)
+        case None => df
+      }
   }
 
   /** First run against `dir` records the manifest (temp-file + rename so

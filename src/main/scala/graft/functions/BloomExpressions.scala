@@ -1,15 +1,14 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
-import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.call_function
 
-/** SQL registration for Spark's Bloom-filter sketch expressions.
+/** Column API over Spark's Bloom-filter sketch expressions.
   *
   * Catalyst ships `BloomFilterAggregate` / `BloomFilterMightContain` for
   * its own runtime row-level filtering but does not register them as SQL
-  * functions; this exposes them as `bloom_agg(hash, items, bits)` and
+  * functions; the catalogue ([[graft.GraftExtensions.functions]]) exposes
+  * them as `bloom_agg(hash, items, bits)` and
   * `bloom_might_contain(filter, hash)` so engine operators can build and
   * probe a Bloom sketch fully inside the plan (distributed, partial-agg
   * mergeable build; codegen'd probe). The probe's filter argument must be
@@ -18,16 +17,6 @@ import org.apache.spark.sql.functions.call_function
   * scalar (the sketch is size-capped by construction) and inline it.
   */
 object BloomExpressions {
-
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_agg",
-      exprs => new BloomFilterAggregate(exprs(0), exprs(1), exprs(2)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_might_contain",
-      exprs => BloomFilterMightContain(exprs(0), exprs(1)), "built-in")
-  }
 
   /** Aggregate: build a Bloom filter over `hash` (LongType, e.g.
     * xxhash64) sized for `items` expected entries in `bits` bits. Spark

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -57,9 +57,5 @@ case class DeflateRatioExpr(child: Expression) extends UnaryExpression {
 }
 
 object CompressExpr {
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "deflate_ratio", exprs => DeflateRatioExpr(exprs.head), "built-in")
-
   def deflateRatio(text: Column): Column = call_function("deflate_ratio", text)
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.functions.call_function
@@ -98,14 +98,6 @@ case class DmsToDegExpr(child: Expression) extends CoordExpr {
 }
 
 object CoordExpressions {
-
-  /** Register `hms_to_deg` / `dms_to_deg` for SQL + call_function use. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hms_to_deg", exprs => HmsToDegExpr(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dms_to_deg", exprs => DmsToDegExpr(exprs.head), "built-in")
-  }
 
   /** Column API over the registered functions (Spark 4 Columns are built
     * from function calls, not raw expressions).

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -234,9 +234,5 @@ case class HtmlLinksExpr(child: Expression) extends UnaryExpression {
 }
 
 object HtmlLinksExpr {
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "html_links", exprs => HtmlLinksExpr(exprs.head), "built-in")
-
   def htmlLinks(html: Column): Column = call_function("html_links", html)
 }

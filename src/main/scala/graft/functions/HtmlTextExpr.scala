@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -220,9 +220,5 @@ case class HtmlTextExpr(child: Expression) extends UnaryExpression {
 }
 
 object HtmlTextExpr {
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "html_text", exprs => HtmlTextExpr(exprs.head), "built-in")
-
   def htmlText(html: Column): Column = call_function("html_text", html)
 }

@@ -2,7 +2,7 @@ package graft.functions
 
 import java.nio.charset.{Charset, CodingErrorAction, StandardCharsets}
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -453,21 +453,6 @@ case class DecodeHttpBodyExpr(left: Expression, right: Expression)
 }
 
 object HttpDecodeExpr {
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "decode_http_body",
-      exprs => DecodeHttpBodyExpr(exprs.head, exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dechunk_http_body",
-      exprs => DechunkHttpBodyExpr(exprs.head, exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "decompress_http_body",
-      exprs => DecompressHttpBodyExpr(exprs.head, exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "compress_http_body",
-      exprs => CompressHttpBodyExpr(exprs.head, exprs(1)), "built-in")
-  }
-
   def decodeHttpBody(body: Column, contentType: Column): Column =
     call_function("decode_http_body", body, contentType)
 

@@ -2,7 +2,7 @@ package graft.functions
 
 import java.nio.charset.StandardCharsets
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -388,9 +388,5 @@ case class ImageMetaExpr(child: Expression) extends UnaryExpression {
 }
 
 object ImageMetaExpr {
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "image_meta", exprs => ImageMetaExpr(exprs.head), "built-in")
-
   def imageMeta(payload: Column): Column = call_function("image_meta", payload)
 }

@@ -2,7 +2,7 @@ package graft.functions
 
 import java.util.Locale
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -583,9 +583,5 @@ case class LangIdExpr(child: Expression) extends UnaryExpression {
 }
 
 object LangIdExpr {
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "langid", exprs => LangIdExpr(exprs.head), "built-in")
-
   def langid(text: Column): Column = call_function("langid", text)
 }

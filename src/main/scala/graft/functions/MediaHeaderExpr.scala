@@ -2,7 +2,7 @@ package graft.functions
 
 import java.nio.charset.StandardCharsets
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -621,17 +621,6 @@ case class Mp3MetaExpr(child: Expression) extends UnaryExpression {
 }
 
 object MediaHeaderExpr {
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "mp4_meta", exprs => Mp4MetaExpr(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "mp3_meta", exprs => Mp3MetaExpr(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "ogg_meta", exprs => OggMetaExpr(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "audio_meta", exprs => AudioMetaExpr(exprs.head), "built-in")
-  }
-
   def mp4Meta(payload: Column): Column = call_function("mp4_meta", payload)
   def mp3Meta(payload: Column): Column = call_function("mp3_meta", payload)
   def oggMeta(payload: Column): Column = call_function("ogg_meta", payload)

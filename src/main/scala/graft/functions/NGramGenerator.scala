@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, Generator}
@@ -55,10 +54,4 @@ case class NGramTuplesGenerator(text: Expression, n: Expression)
     copy(text = newChildren(0), n = newChildren(1))
 
   override def prettyName: String = "ngram_tuples"
-}
-
-object NGramGenerator {
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "ngram_tuples", exprs => NGramTuplesGenerator(exprs(0), exprs(1)), "built-in")
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
@@ -184,14 +184,6 @@ case class RobotsAllowedExpr(left: Expression, right: Expression)
 }
 
 object RobotsExpr {
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "robots_rules", exprs => RobotsRulesExpr(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "robots_allowed", exprs => RobotsAllowedExpr(exprs(0), exprs(1)),
-      "built-in")
-  }
-
   def robotsRules(txt: Column): Column = call_function("robots_rules", txt)
   def robotsAllowed(rules: Column, path: Column): Column =
     call_function("robots_allowed", rules, path)

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, XxHash64Function}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -332,29 +332,10 @@ case class SortedIntersectSizeExpr(left: Expression, right: Expression)
 
 object SketchExpressions {
 
-  private def foldInt(e: Expression, what: String): Int = {
+  /** Argument check of the catalogue builders: `e` must be a literal. */
+  private[graft] def foldInt(e: Expression, what: String): Int = {
     require(e.foldable, s"$what must be a literal")
     e.eval().asInstanceOf[Number].intValue()
-  }
-
-  /** Register `minhash_sig` / `simhash64` for SQL + call_function use. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_sig",
-      exprs => MinHashSigExpr(exprs(0),
-        foldInt(exprs(1), "shingle n"), foldInt(exprs(2), "num hashes")),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash64", exprs => SimHash64Expr(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "word_shingles",
-      exprs => WordShinglesExpr(exprs(0), foldInt(exprs(1), "shingle n")),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "norm_text", exprs => NormTextExpr(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sorted_intersect_size",
-      exprs => SortedIntersectSizeExpr(exprs(0), exprs(1)), "built-in")
   }
 
   def minhashSig(text: Column, n: Int, k: Int): Column =

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -131,9 +131,5 @@ case class TextMetricsExpr(child: Expression) extends UnaryExpression {
 }
 
 object TextMetricsExpr {
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "text_metrics", exprs => TextMetricsExpr(exprs.head), "built-in")
-
   def textMetrics(text: Column): Column = call_function("text_metrics", text)
 }

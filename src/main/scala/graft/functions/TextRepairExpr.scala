@@ -2,7 +2,7 @@ package graft.functions
 
 import java.nio.charset.{CodingErrorAction, StandardCharsets}
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -108,9 +108,5 @@ case class FixMojibakeExpr(child: Expression) extends UnaryExpression {
 }
 
 object TextRepairExpr {
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "fix_mojibake", exprs => FixMojibakeExpr(exprs.head), "built-in")
-
   def fixMojibake(text: Column): Column = call_function("fix_mojibake", text)
 }

@@ -11,8 +11,9 @@ object VectorFns {
 
   private def asD(c: Column): Column = c.cast("array<double>")
 
-  /** Dot product via the codegen'd [[VecDotExpr]] (needs [[graft.Sessions.init]]
-    * to have registered `vec_dot` — all engine entry points do).
+  /** Dot product via the codegen'd [[VecDotExpr]] (`vec_dot` from the
+    * function catalogue: the session needs [[graft.GraftExtensions]] or one
+    * [[graft.Sessions.init]]).
     */
   def dot(a: Column, b: Column): Column = VectorExpressions.vecDot(a, b)
 

@@ -79,9 +79,10 @@ object AsOf {
 
   /** Native sort-merge as-of join via the custom
     * [[graft.plans.AsOfJoinPlan]] operator (requires the
-    * [[graft.plans.AsOfJoinStrategy]] planner strategy — registered by
-    * [[graft.Sessions.init]]). Same semantics as [[joinBackward]] with a
-    * strictly smaller plan: shuffle + sort per side + streaming merge.
+    * [[graft.plans.AsOfJoinStrategy]] planner strategy — injected by
+    * [[graft.GraftExtensions]], or added by one [[graft.Sessions.init]]).
+    * Same semantics as [[joinBackward]] with a strictly smaller plan:
+    * shuffle + sort per side + streaming merge.
     *
     * The right side is re-aliased column-by-column first, giving it fresh
     * expression ids so self-source as-of joins (left and right derived from

@@ -80,7 +80,6 @@ object Decontaminate {
   ): DataFrame = {
     require(expectedGrams > 0, s"expectedGrams must be positive: $expectedGrams")
     require(fpp > 0 && fpp < 1, s"fpp must be in (0, 1): $fpp")
-    graft.functions.BloomExpressions.register(corpus.sparkSession)
     val bench = grams(benchmark, benchTextCol, None, n)
     val numBits = org.apache.spark.util.sketch.BloomFilter
       .optimalNumOfBits(expectedGrams, fpp)

@@ -97,7 +97,6 @@ object Domains {
       robots: DataFrame, robotsHostCol: String = "host",
       robotsTxtCol: String = "robots_txt",
       broadcastRobots: Boolean = true): DataFrame = {
-    graft.functions.RobotsExpr.register(docs.sparkSession)
     val rules = robots
       .groupBy(col(s"`$robotsHostCol`").as("__rb_host"))
       .agg(min(col(s"`$robotsTxtCol`")).as("__rb_txt"))

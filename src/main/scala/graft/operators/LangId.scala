@@ -62,7 +62,6 @@ object LangId {
       minOovGap: Double = DefaultMinOovGap, minMargin: Double = 0.0,
       minTrigrams: Int = 1,
       langCol: String = "lang", confCol: String = "lang_conf"): DataFrame = {
-    LangIdExpr.register(docs.sparkSession)
     val lid = langid(col(s"`$textCol`"))
     docs.withColumn("__lid", lid)
       .withColumn(langCol,

@@ -24,7 +24,6 @@ object TextStats {
   def compressionBandFilter(docs: DataFrame, textCol: String,
                             minRatio: Double, maxRatio: Double): DataFrame = {
     require(minRatio <= maxRatio, s"empty band [$minRatio, $maxRatio]")
-    graft.functions.CompressExpr.register(docs.sparkSession)
     val r = graft.functions.CompressExpr.deflateRatio(col(s"`$textCol`"))
     docs.where(r >= minRatio && r <= maxRatio)
   }

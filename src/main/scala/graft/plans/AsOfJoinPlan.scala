@@ -141,8 +141,9 @@ case class AsOfJoinExec(
     copy(left = newLeft, right = newRight)
 }
 
-/** Planner strategy: AsOfJoinPlan -> AsOfJoinExec. Registered via
-  * `spark.experimental.extraStrategies` in [[graft.Sessions.init]].
+/** Planner strategy: AsOfJoinPlan -> AsOfJoinExec. Injected with the
+  * function catalogue by [[graft.GraftExtensions]]; [[graft.Sessions.init]]
+  * adds it to a session built without that extension.
   */
 object AsOfJoinStrategy extends org.apache.spark.sql.execution.SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {

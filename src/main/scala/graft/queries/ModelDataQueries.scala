@@ -314,7 +314,6 @@ object ModelDataQueries {
     // string in closed form; any framing slip (size line left in the
     // content, data CRLF eaten, trailer leaked) breaks the hash.
     "q157_chunked_decode" -> ((s, dir) => {
-      graft.functions.HttpDecodeExpr.register(s)
       val leg = pmod(col("doc_id"), lit(4))
       val crlf = lit("\r\n".getBytes(java.nio.charset.StandardCharsets.UTF_8))
       def ascii(t: String) =

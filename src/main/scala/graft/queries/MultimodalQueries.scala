@@ -266,7 +266,6 @@ object MultimodalQueries {
     // frame-hop arithmetic (417-byte frames) and the quarantine
     // posture on malformed payloads.
     "q159_media_headers" -> ((s, dir) => {
-      graft.functions.MediaHeaderExpr.register(s)
       def h8(c: Column) = lpad(hex(c), 8, "0")
       def hx(t: String) =
         t.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
@@ -386,7 +385,6 @@ object MultimodalQueries {
     // minus the pre-skip). The oracle states codec/channels/rate/pages/
     // duration in closed form from doc_id; a malformed leg quarantines.
     "q161_ogg_headers" -> ((s, dir) => {
-      graft.functions.MediaHeaderExpr.register(s)
       def hx(t: String) =
         t.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
           .map(b => f"$b%02x").mkString
@@ -491,7 +489,6 @@ object MultimodalQueries {
     // oracle states every field in CLOSED FORM from doc_id, so parser
     // and constructor must invert each other exactly.
     "q167_image_headers" -> ((s, dir) => {
-      graft.functions.ImageMetaExpr.register(s)
       def hx(t: String) =
         t.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
           .map(b => f"$b%02x").mkString
@@ -613,7 +610,6 @@ object MultimodalQueries {
     // claim (data size / byte rate), parsed without the payload.
     // Closed-form oracle; a truncated-block malformed leg quarantines.
     "q169_audio_headers" -> ((s, dir) => {
-      graft.functions.MediaHeaderExpr.register(s)
       def hx(t: String) =
         t.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
           .map(b => f"$b%02x").mkString

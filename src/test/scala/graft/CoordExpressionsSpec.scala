@@ -7,7 +7,6 @@ class CoordExpressionsSpec extends SparkSuite {
   import spark.implicits._
 
   test("codegen'd expressions agree with Column-composition versions") {
-    CoordExpressions.register(spark)
     val df = Seq("4:40:17.07", "0:00:00", "23:59:59.999", "12:30:15.5").toDF("s")
     val both = df.select(
       Coordinates.hmsToDeg($"s").as("composed"),
@@ -22,7 +21,6 @@ class CoordExpressionsSpec extends SparkSuite {
   }
 
   test("SQL registration works end-to-end") {
-    CoordExpressions.register(spark)
     val r = spark.sql("SELECT hms_to_deg('4:40:17.07') AS ra, dms_to_deg('-43:33:09.0') AS dec")
       .head()
     assert(r.getDouble(0) === 70.07113)
@@ -30,13 +28,11 @@ class CoordExpressionsSpec extends SparkSuite {
   }
 
   test("malformed input yields NaN, not a crash") {
-    CoordExpressions.register(spark)
     val r = spark.sql("SELECT hms_to_deg('garbage') AS x, hms_to_deg('1:2') AS y").head()
     assert(r.getDouble(0).isNaN && r.getDouble(1).isNaN)
   }
 
   test("stays inside whole-stage codegen (no fallback in the plan)") {
-    CoordExpressions.register(spark)
     val df = spark.range(100)
       .select(concat($"id".cast("string"), lit(":30:00")).as("s"))
       .select(CoordExpressions.hmsToDeg($"s").as("d"))

@@ -199,7 +199,6 @@ class ImageMetaSpec extends SparkSuite {
   }
 
   test("expression: codegen plan, null-safe, struct fields project") {
-    ImageMetaExpr.register(spark)
     val vp8 = riff(cc("VP8 ") ++ le(10, 4) ++
       (Array[Byte](0, 0, 0, 0x9d.toByte, 0x01, 0x2a) ++ le(33, 2) ++ le(44, 2)))
     val df = Seq((1L, vp8), (2L, "junk".getBytes),

@@ -414,7 +414,6 @@ class MediaHeadersSpec extends SparkSuite {
   test("expressions run inside whole-stage codegen over a binary column") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    graft.functions.MediaHeaderExpr.register(spark)
     val b = ftyp ++ box("moov", mvhdV0(1000, 3000), trak("avc1"))
     val m = l3Frame() ++ l3Frame() ++ l3Frame()
     val df = Seq((1L, b, m)).toDF("id", "v", "a")

@@ -46,7 +46,6 @@ class StreamingMultimodalSpec extends SparkSuite {
     import org.apache.spark.sql.functions._
     import java.nio.ByteBuffer
     import java.nio.charset.StandardCharsets.ISO_8859_1
-    graft.functions.MediaHeaderExpr.register(spark)
     def u32(v: Long) = ByteBuffer.allocate(4).putInt(v.toInt).array()
     def box(t: String, p: Array[Byte]*) = {
       val pay = p.flatten.toArray

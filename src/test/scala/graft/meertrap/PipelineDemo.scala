@@ -24,7 +24,6 @@ object PipelineDemo {
     MeertrapPipeline.firstSpCandidate(out).show(truncate = false)
 
     // SQL-registered codegen'd coordinate functions
-    graft.functions.CoordExpressions.register(spark)
     println("sql coord functions:")
     spark.sql("SELECT hms_to_deg('4:40:17.07') AS ra_deg, dms_to_deg('-43:33:09.0') AS dec_deg")
       .show()
