@@ -44,12 +44,13 @@ object Bench {
     // clamped at 0 (run-to-run noise can invert tiny differences).
     //
     // The split is measured IMMEDIATELY after that query's full reps, not
-    // in a second loop after the whole suite: by the end of a 110-query
-    // run the session has hours of localCheckpoint'd RDD blocks awaiting
-    // GC-driven ContextCleaner cleanup, and late-run split entries were
-    // measured up to 4x slower than fresh-session medians (r10 artifact
-    // read serving > full for q82/q87). Session state is also cleared
-    // between queries so one query's leaked cache can't tax the next.
+    // in a second loop after the whole suite: late-run split entries were
+    // measured up to 4x slower than fresh-session medians when dead
+    // checkpoint blocks piled up over the run (r10 artifact read serving
+    // > full for q82/q87). Every rep is one registered build, which frees
+    // the previous build's persists and checkpoints when it opens
+    // (graft.core.Frames); the SQL cache is also cleared between queries
+    // so a cache no build owns can't tax the next query.
     val results = scala.collection.mutable.ArrayBuffer.empty[(String, (Double, Double))]
     val splits = scala.collection.mutable.ArrayBuffer.empty[(String, (Double, Double))]
     selected.foreach { case (name, fn) =>

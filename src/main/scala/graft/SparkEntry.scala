@@ -20,25 +20,18 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("q03_join_chain")(spark, "/root/testdata/sf0.001")
 
-  /** Each query passes the caller's session through [[Sessions.init]]
-    * first — the driver may pass a session it built itself rather than one
-    * from [[Sessions.builder]]; on a graft session that is a no-op.
+  /** Each query is one build ([[graft.core.Frames.owned]]): opening it
+    * frees what the previous build persisted and checkpointed, and the
+    * returned frame answers any number of actions, and a retry after a
+    * failed action, until the next build opens. The caller's session
+    * passes through [[Sessions.init]] first — the driver may pass a
+    * session it built itself rather than one from [[Sessions.builder]];
+    * on a graft session that is a no-op.
     */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    (RelationalQueries.defs ++ EventQueries.defs ++ TextQueries.all ++
+    registered(RelationalQueries.defs ++ EventQueries.defs ++ TextQueries.all ++
       VectorQueries.defs ++ MultimodalQueries.defs ++ WebQueries.defs ++
       ModelDataQueries.defs)
-      .map { case (name, fn) =>
-        name -> ((s: SparkSession, dir: String) => {
-          val out = fn(Sessions.init(s), dir)
-          // Post-consumption hygiene: release this query's (and any dead
-          // leftover) checkpoint/RDD blocks once the next action — the
-          // harness's consuming count/write — completes. See
-          // [[graft.core.Frames.sweepRddBlocksAfterNextAction]].
-          graft.core.Frames.sweepRddBlocksAfterNextAction(s)
-          out
-        })
-      }
 
   def oracleSql: Map[String, String] =
     RelationalQueries.oracles ++ EventQueries.oracles ++ TextQueries.oracles ++
@@ -50,13 +43,12 @@ object SparkEntry {
     * serving/gate split; NOT part of the correctness contract.
     */
   def servingQueries: Map[String, (SparkSession, String) => DataFrame] =
-    (TextQueries.serving ++ VectorQueries.serving ++ ModelDataQueries.serving ++
-      WebQueries.serving)
-      .map { case (name, fn) =>
-        name -> ((s: SparkSession, dir: String) => {
-          val out = fn(Sessions.init(s), dir)
-          graft.core.Frames.sweepRddBlocksAfterNextAction(s)
-          out
-        })
-      }
+    registered(TextQueries.serving ++ VectorQueries.serving ++
+      ModelDataQueries.serving ++ WebQueries.serving)
+
+  private def registered(defs: Map[String, (SparkSession, String) => DataFrame]) =
+    defs.map { case (name, fn) =>
+      name -> ((s: SparkSession, dir: String) =>
+        graft.core.Frames.owned(s)(fn(Sessions.init(s), dir)))
+    }
 }

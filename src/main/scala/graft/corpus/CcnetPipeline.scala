@@ -115,8 +115,9 @@ object CcnetPipeline {
     // showed the main thread RUNNABLE in CheckAnalysis/canonicalized
     // between jobs; q164 spent ~12s of 35s outside any Spark job).
     // localCheckpoint cuts each stage to a leaf: downstream plans stay
-    // O(stage) for the analyzer AND the executor. Blocks free when the
-    // frames are GC'd.
+    // O(stage) for the analyzer AND the executor. The blocks belong to
+    // the current build ([[graft.core.Frames]]): the next build frees
+    // them.
     // The Incremental registry's dedupeBatch already returns an eager
     // localCheckpoint(true) leaf (StreamingParagraphDedup) — re-
     // checkpointing it would be a second full materialization and a

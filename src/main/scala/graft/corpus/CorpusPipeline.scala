@@ -28,13 +28,7 @@ object CorpusPipeline {
       afterExactDedup: Long,
       afterNearDedup: Long)
 
-  /** `cached` holds the pipeline-internal persisted frames when the caller
-    * asked to manage release itself (`autoRelease = false`) — pass them to
-    * `Frames.releaseAfterNextAction` once the consuming query is fully
-    * built. Empty when `run` auto-releases.
-    */
-  final case class Result(corpus: DataFrame, stats: Stats,
-                          cached: Seq[DataFrame] = Nil)
+  final case class Result(corpus: DataFrame, stats: Stats)
 
   private def c(n: String): Column = col(s"`$n`")
 
@@ -53,8 +47,7 @@ object CorpusPipeline {
       .drop("__m")
   }
 
-  def run(docs: DataFrame, cfg: Config = Config(),
-          autoRelease: Boolean = true): Result = {
+  def run(docs: DataFrame, cfg: Config = Config()): Result = {
     val input = docs.where(c(cfg.textCol).isNotNull)
     val annotated = annotate(input, cfg).cache()
 
@@ -79,18 +72,9 @@ object CorpusPipeline {
       afterQuality = filtered.count(),
       afterExactDedup = exact.count(),
       afterNearDedup = corpus.count())
-    // The stage counts above (plus connectedComponents' eager edge
-    // collect) consumed every cached frame; repeated run() invocations
-    // must not accumulate session-lifetime cache entries (round-4
-    // finding). Default: release after the next action — right for the
-    // build-then-run-once call pattern. A caller that interleaves OTHER
-    // eager work before consuming the corpus (q52's independent parity
-    // recomposition) passes autoRelease = false and registers the
-    // returned `cached` frames itself once its query is fully built.
-    val internal = Seq(annotated, filtered, exact)
-    if (autoRelease) {
-      graft.core.Frames.releaseAfterNextAction(docs.sparkSession, internal: _*)
-      Result(corpus, stats)
-    } else Result(corpus, stats, internal)
+    // Repeated run() invocations must not accumulate session-lifetime
+    // cache entries (round-4 finding): the build owns the stage caches.
+    graft.core.Frames.own(docs.sparkSession, annotated, filtered, exact)
+    Result(corpus, stats)
   }
 }

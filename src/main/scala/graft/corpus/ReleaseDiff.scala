@@ -130,7 +130,7 @@ object ReleaseDiff {
     val sigCand = Dedup.minhashSignaturesGen(cand, idCol, textCol,
         shingleN, numHashes)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Frames.releaseAfterNextAction(candidates.sparkSession, sigCand)
+    graft.core.Frames.own(candidates.sparkSession, sigCand)
     val pairs = Dedup.minhashLshPairsBetween(cand, cand /* unused */,
         textCol, idCol, shingleN, numHashes, bands, threshold,
         precomputedSigLeft = Some(sigCand),

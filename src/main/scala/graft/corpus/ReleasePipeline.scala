@@ -103,13 +103,15 @@ object ReleasePipeline {
     * over the exact-dedup survivors (lazily persisted —
     * [[appendBatch]] and [[ReleaseDiff]] diff future candidate batches
     * against this release through it, and parity harnesses reuse it
-    * instead of re-running the sketch kernel; callers that consume it
-    * should unpersist when done); `paraPairs`: stage 3b's paragraph
-    * near-dup PAIR frame (id_a, id_b), retained for the same reason and
-    * under the same contract when `cfg.paragraphDedup` is on (lazily
-    * persisted; the pair kernel is the single most expensive stage, so
-    * parity harnesses reuse the pairs rather than re-running the window
-    * split + pair search — see the q82 gate).
+    * instead of re-running the sketch kernel); `paraPairs`: stage 3b's
+    * paragraph near-dup PAIR frame (id_a, id_b), retained for the same
+    * reason when `cfg.paragraphDedup` is on (lazily persisted; the pair
+    * kernel is the single most expensive stage, so parity harnesses
+    * reuse the pairs rather than re-running the window split + pair
+    * search — see the q82 gate). Both persists, and every stage
+    * checkpoint, belong to the current build ([[graft.core.Frames]]):
+    * every member, lazy ones included, answers until the next build
+    * opens.
     */
   final class Result(val corpus: DataFrame, packedFn: => DataFrame,
       statsFn: () => Stats,
@@ -118,17 +120,13 @@ object ReleasePipeline {
     /** Stage 7's packing assignment, MATERIALIZED ON FIRST ACCESS and
       * memoized: [[Packing.packChunks]] runs two eager probe jobs (the
       * bucket-boundary quantiles and the per-bucket subtotals) that no
-      * caller which only consumes `corpus` should pay for. The probes
-      * read the checkpointed survivors, so a harness-wrapped query must
-      * force `packed` during its construction, before the consuming
-      * action (whose completion sweeps the stage blocks).
+      * caller which only consumes `corpus` should pay for.
       */
     lazy val packed: DataFrame = packedFn
     /** Stage survivor counts, computed on FIRST ACCESS (r18): each count
       * is one job over a checkpointed stage frame, ~10 jobs per run() —
       * pure overhead for the many callers (every release-family query)
-      * that never read them. Access before the stage frames are released
-      * (i.e. before the consuming action for harness-wrapped queries).
+      * that never read them.
       */
     lazy val stats: Stats = statsFn()
     /** This release as [[appendBatch]]'s frozen prior. */
@@ -228,6 +226,7 @@ object ReleasePipeline {
     // reuses it.
     val sig = registryOf(exact, "text", "doc_id", cfg.shingleN)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    graft.core.Frames.own(docs.sparkSession, sig)
     val deduped = staged("3_dedup", {
       val drops = Dedup.connectedComponents(
           Dedup.minhashLshPairs(exact, "text", "doc_id",
@@ -254,6 +253,7 @@ object ReleasePipeline {
             knownMaxShingles = Some(cfg.paragraphWindow - cfg.shingleN + 1))
           .select(col("doc_a").as("id_a"), col("doc_b").as("id_b"))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    paraPairs.foreach(graft.core.Frames.own(docs.sparkSession, _))
     // Single consumer each (the next stage; the CC edge collect runs
     // eagerly inside connectedComponents regardless) — fused forward;
     // the next staged boundary (5_decontaminate) truncates the plan.
@@ -415,11 +415,9 @@ object ReleasePipeline {
     * batch's post-exact-dedup signatures); `registryNew`: just this
     * batch's registry contribution (minhashSig minus the prior part) —
     * what an append-only registry STORE persists per batch
-    * ([[graft.streaming.StreamingReleaseAppend]]); `cached`:
-    * pipeline-internal persisted frames (the batch signature) — the
-    * CorpusPipeline convention: the caller unpersists these when done
-    * (recomputation stays correct afterwards, the lineage roots are
-    * checkpointed stages).
+    * ([[graft.streaming.StreamingReleaseAppend]]). The batch signature
+    * persist and every stage checkpoint belong to the current build
+    * ([[graft.core.Frames]]).
     *
     * MATERIALIZED ON FIRST ACCESS — the batch-relative tail (paragraph
     * near-dup, dup-span removal, decontamination, LM floor) and the
@@ -433,11 +431,9 @@ object ReleasePipeline {
     * probes); `stats`. [[toPrior]] forces none of them, so an append
     * consumed only at its dedup boundary (a chained parity check) never
     * builds its tail. The first access runs the tail's eager jobs over
-    * the dedup-boundary checkpoint, so a harness-wrapped query must
-    * force every member it reads during its construction, before the
-    * consuming action (whose completion sweeps the stage blocks). With
-    * `checkpointDir` the tail (not the packing) is forced before
-    * [[appendBatch]] returns.
+    * the dedup-boundary checkpoint, so it works until the next build
+    * opens. With `checkpointDir` the tail (not the packing) is forced
+    * before [[appendBatch]] returns.
     */
   final class AppendResult(
       newKeptFn: => DataFrame,
@@ -446,8 +442,7 @@ object ReleasePipeline {
       val dedupSurvivors: DataFrame,
       val minhashSig: DataFrame,
       val registryNew: DataFrame,
-      statsFn: () => AppendStats,
-      val cached: Seq[DataFrame] = Nil) {
+      statsFn: () => AppendStats) {
     lazy val newKept: DataFrame = newKeptFn
     lazy val corpus: DataFrame = corpusFn
     lazy val packedNew: DataFrame = packedNewFn
@@ -479,8 +474,7 @@ object ReleasePipeline {
     * `toPrior`, whose tail is then never built. The call itself
     * materializes the batch only through the dedup boundary (a1–a4 and
     * the batch registry); the batch-relative tail and the packing run
-    * on first access to [[AppendResult]]'s lazy members, which a
-    * harness-wrapped query must read before its consuming action.
+    * on first access to [[AppendResult]]'s lazy members.
     * Gram-level novelty vs the prior TEXT
     * (run()'s stage-0 `noveltyRef`) is deliberately absent here — it
     * would re-scan the release; callers who can afford that pass the
@@ -586,6 +580,7 @@ object ReleasePipeline {
     })
     val sigBatch = registryOf(exact, "text", "doc_id", cfg.shingleN)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    graft.core.Frames.own(spark, sigBatch)
 
     // 4. Greedy near-dup: vs the prior registry (band join on the RETAINED
     // sig frame — no prior text scan), then within the batch (a < b drops
@@ -673,8 +668,7 @@ object ReleasePipeline {
       dedupSurvivors = deduped.select("doc_id"),
       minhashSig = prior.minhashSig.unionByName(sigBatch),
       registryNew = sigBatch,
-      statsFn = stats,
-      cached = Seq(sigBatch))
+      statsFn = stats)
   }
 
   /** Append-build fingerprint: [[manifest]]'s fields plus the prior
@@ -742,7 +736,8 @@ object ReleasePipeline {
     * exponential plan trees for listener events, dwarfing execution.
     * localCheckpoint cuts the subtree to a leaf: plans stay O(stage),
     * which is also what keeps Catalyst/AQE planning time bounded on a
-    * real cluster. Blocks free when the frames are GC'd.
+    * real cluster. The blocks belong to the current build
+    * ([[graft.core.Frames]]): the next build frees them.
     *
     * Single-consumer boundaries (`fused`): with the stats counts lazy,
     * some stage frames have exactly ONE live consumer — the next stage.

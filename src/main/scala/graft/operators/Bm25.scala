@@ -343,9 +343,9 @@ object Bm25 {
 
   /** Convenience: build the index inline and query it. The tf frame is
     * consumed three times inside [[topK]] (doc lengths, df, scoring),
-    * so it persists for the call and releases after the action that
-    * consumes the result — without this the tokenize + (doc, term)
-    * shuffle would run three times per query batch. Prefer [[index]] +
+    * so it persists, owned by the current build ([[graft.core.Frames]])
+    * — without this the tokenize + (doc, term) shuffle would run three
+    * times per query batch. Prefer [[index]] +
     * [[topK]] with a caller-persisted index when serving more than one
     * query batch.
     */
@@ -356,7 +356,7 @@ object Bm25 {
     val tf = ix.tf.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val out = topK(Index(tf, tf.groupBy("doc_id").agg(sum("tf").as("dl"))),
       queries, queryIdCol, queryTextCol, k)
-    graft.core.Frames.releaseAfterNextAction(docs.sparkSession, tf)
+    graft.core.Frames.own(docs.sparkSession, tf)
     out
   }
 
@@ -726,7 +726,7 @@ object Bm25 {
     }
 
     /** Query the stored index (tf cached for the call's consumers,
-      * released after the consuming action). Against a compacted
+      * owned by the current build). Against a compacted
       * index, doc lengths come from the `dl` artifact and N/avgdl from
       * the `stats` artifact (+ tail merge) — no full-tf re-aggregation
       * on the serving path; with term bucketing the scoring scan also
@@ -744,7 +744,7 @@ object Bm25 {
         else ix.tf.groupBy("doc_id").agg(sum("tf").as("dl"))
       val out = Bm25.topK(Index(tf, dl),
         queries, queryIdCol, queryTextCol, k, params, corpusStats = stats)
-      graft.core.Frames.releaseAfterNextAction(spark, tf)
+      graft.core.Frames.own(spark, tf)
       out
     }
 

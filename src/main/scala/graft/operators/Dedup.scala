@@ -384,7 +384,7 @@ object Dedup {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val shR = shingleFrame(right, textCol, idCol, n)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Frames.releaseAfterNextAction(left.sparkSession, shL, shR)
+    graft.core.Frames.own(left.sparkSession, shL, shR)
     def exploded(sh: DataFrame) =
       sh.select(col("id"), col("n_sh"), explode(col("sh")).as("s"))
     val exL = exploded(shL); val exR = exploded(shR)
@@ -732,7 +732,7 @@ object Dedup {
   ): DataFrame = {
     val sh = shingleFrame(df, textCol, idCol, n)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Frames.releaseAfterNextAction(df.sparkSession, sh)
+    graft.core.Frames.own(df.sparkSession, sh)
     val exploded = sh.select(col("id"), col("n_sh"), explode(col("sh")).as("s"))
     // Global document frequency per shingle (the ordering key).
     val dfreq = exploded.groupBy("s").agg(count(lit(1)).as("df"))
@@ -805,7 +805,7 @@ object Dedup {
     // sorted-merge intersect per candidate: |A∩B| == |A|.
     val sh = shingleFrame(df, textCol, idCol, n)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Frames.releaseAfterNextAction(df.sparkSession, sh)
+    graft.core.Frames.own(df.sparkSession, sh)
     val exploded = sh.select(col("id"), explode(col("sh")).as("s"))
     val dfreq = exploded.groupBy("s").agg(count(lit(1)).as("df"))
     val rarest = exploded.join(dfreq, "s")
@@ -884,9 +884,7 @@ object Dedup {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val maxRow = dfreq.agg(max(col("df"))).head()
       val maxDf  = if (maxRow.isNullAt(0)) 0L else maxRow.getLong(0)
-      // Register AFTER the eager probe above, or the probe's own action
-      // would release the frames before the real query runs.
-      graft.core.Frames.releaseAfterNextAction(df.sparkSession, sh, dfreq)
+      graft.core.Frames.own(df.sparkSession, sh, dfreq)
       if (maxDf > maxPostingLen) prefixFilteredFrom(sh, exploded, dfreq, threshold)
       else invertedIndexJaccard(exploded, threshold)
     }

@@ -142,7 +142,7 @@ object LinkGraph {
         iterCaches += ranks
       }
     }
-    graft.core.Frames.releaseAfterNextAction(
+    graft.core.Frames.own(
       spark, (Seq(nodeDf, eod, dangling) ++ iterCaches.toSeq): _*)
     (ranks, i)
   }

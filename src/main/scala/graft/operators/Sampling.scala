@@ -427,9 +427,11 @@ object Sampling {
     * stratum missing from `avail` pins T* to 0 (the mixture is
     * infeasible, and silently renormalizing would misreport it).
     *
-    * Shape: weights are config (strata-sized) and broadcast-join the
-    * availability aggregate; T* is ONE double read on the driver (the
-    * centroid-read idiom) re-entering as a literal — no 1-row
+    * Shape: weights are config (strata-sized) and left-join the
+    * availability aggregate, which is broadcast (the non-preserved side
+    * of the left join — the only side Spark can build); T* is ONE
+    * double read on the driver (the centroid-read idiom) re-entering as
+    * a literal — no 1-row
     * cross-join gate shape, no corpus access at all (callers pass the
     * already-aggregated per-stratum counts).
     */
@@ -442,9 +444,9 @@ object Sampling {
     require(budget > 0, s"budget must be positive, got $budget")
     val spark = avail.sparkSession
     import spark.implicits._
-    val joined = broadcast(weights.toSeq.toDF("stratum", "weight"))
-      .join(avail.select(col(s"`$stratumCol`").as("stratum"),
-        col(s"`$tokensCol`").cast("long").as("n_avail")), Seq("stratum"), "left")
+    val joined = weights.toSeq.toDF("stratum", "weight")
+      .join(broadcast(avail.select(col(s"`$stratumCol`").as("stratum"),
+        col(s"`$tokensCol`").cast("long").as("n_avail"))), Seq("stratum"), "left")
       .select(col("stratum"), coalesce(col("n_avail"), lit(0L)).as("n_avail"),
         col("weight"))
     val tCap = joined

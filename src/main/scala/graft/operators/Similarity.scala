@@ -380,8 +380,7 @@ object Similarity {
         else if (toks.agg(approx_count_distinct("id")).head().getLong(0) > denseMaxRows) None
         else Some(vs.sorted)
       }
-    // Registered AFTER the probe actions — they must not trigger release.
-    graft.core.Frames.releaseAfterNextAction(df.sparkSession, toks)
+    graft.core.Frames.own(df.sparkSession, toks)
 
     denseVocab match {
       case Some(dims) => denseTokenCosine(toks, dims, threshold)

@@ -687,8 +687,8 @@ object TextStats {
     * bounded scalar read re-entering as literals (the centroid idiom —
     * the projection stays join-free), one full-outer term join —
     * term-dictionary-sized (Zipf). The joined count frame persists for
-    * the call (it feeds the totals probe and the projection) and
-    * releases after the consuming action.
+    * the call (it feeds the totals probe and the projection), owned by
+    * the current build ([[graft.core.Frames]]).
     */
   def termDrift(a: DataFrame, b: DataFrame, textCol: String,
                 minCount: Long = 1L): DataFrame = {
@@ -720,7 +720,7 @@ object TextStats {
         pa.as("p_a"), pb.as("p_b"),
         (side(pa) + side(pb)).as("js_contrib"))
       .where(col("cnt_a") + col("cnt_b") >= minCount)
-    graft.core.Frames.releaseAfterNextAction(a.sparkSession, joined)
+    graft.core.Frames.own(a.sparkSession, joined)
     out
   }
 }

@@ -523,8 +523,7 @@ object ModelDataQueries {
   /** q153's shared half: max-score pruned retrieval over the q129
     * corpus/queries; the gated variant pins exact (query, doc, rank,
     * score) parity with the unpruned [[Bm25.topK]]. The tf frame
-    * persists across both routes' consumers and releases after the
-    * consuming action.
+    * persists across both routes' consumers, owned by the build.
     */
   private def mkQ153(gated: Boolean): Q = (s, dir) => {
     val docs = Tables(s, dir, "documents").where(col("text").isNotNull)
@@ -546,7 +545,7 @@ object ModelDataQueries {
           col("query_id"), col("doc_id"), col("rank"), col("score")).as("k"))
         Gates.setParityOn(pruned, key(pruned), key(plain), "k")
       }
-    graft.core.Frames.releaseAfterNextAction(s, tf)
+    graft.core.Frames.own(s, tf)
     out.select(col("query_id"), col("doc_id"), col("score"),
         col("rank").cast("long").as("rank"))
       .orderBy("query_id", "rank")

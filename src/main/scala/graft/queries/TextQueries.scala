@@ -2017,6 +2017,7 @@ object TextQueries {
       .select(col("doc_id"), graft.operators.Pii.redact(col("text")).as("text"))
     val priorSig = ReleasePipeline.registryOf(relDocs, "text", "doc_id", 3)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    graft.core.Frames.own(s, priorSig)
     val prior = ReleasePipeline.PriorRelease(relDocs, priorSig)
     val batchAll = docs.where(pmod(col("doc_id"), lit(7)) =!= 0 &&
       pmod(col("doc_id"), lit(97)) =!= 0)
@@ -2026,20 +2027,17 @@ object TextQueries {
     // verify split-invariance, so it lives on the GATE side of the bench's
     // serving/gate split (r9 bench-hygiene finding: benching both passes
     // as "serving" overstated single-append cost ~2x). An append builds
-    // its post-dedup tail on first access: reading `one.newKept` here,
-    // during construction, builds the serving tail before the consuming
-    // action; the gate's chained appends are read only at their dedup
+    // its post-dedup tail on first access: reading `one.newKept` here
+    // builds the serving tail; the gate's chained appends are read only
+    // at their dedup
     // boundary (and `r1.toPrior` never reads r1's corpus), so their
     // tails and packing are never built.
     val one = ReleasePipeline.appendBatch(prior, batchAll, bench, cfg)
     val out0 = one.newKept.select(col("doc_id"),
       TextFns.tokenCount(col("text")).cast("long").as("n_tokens"))
     val out =
-      if (!gated) {
-        graft.core.Frames.releaseAfterNextAction(s,
-          (priorSig +: one.cached): _*)
-        out0
-      } else {
+      if (!gated) out0
+      else {
         val mid = batchAll.agg(expr("approx_percentile(doc_id, 0.5)"))
           .head().getLong(0)
         val r1 = ReleasePipeline.appendBatch(prior,
@@ -2047,8 +2045,6 @@ object TextQueries {
         val r2 = ReleasePipeline.appendBatch(r1.toPrior,
           batchAll.where(col("doc_id") > mid), bench, cfg)
         val chained = r1.dedupSurvivors.unionByName(r2.dedupSurvivors)
-        graft.core.Frames.releaseAfterNextAction(s,
-          (priorSig +: (one.cached ++ r1.cached ++ r2.cached)): _*)
         Gates.setParityOn(out0, chained, one.dedupSurvivors, "doc_id")
       }
     out.orderBy("doc_id")
@@ -2099,13 +2095,9 @@ object TextQueries {
   // parity and fails the driver's rows-check.
   private def mkQ52(gated: Boolean): Q = (s, dir) => {
     val docs = Tables(s, dir, "documents")
-    // gated: the parity recomposition below runs its own eager actions
-    // before the final consumption — manage the pipeline caches here so
-    // they survive until the gated query's single consuming action.
     val res = graft.corpus.CorpusPipeline.run(docs,
       graft.corpus.CorpusPipeline.Config(
-        minTokens = 3, minQuality = 0.1, nearDupThreshold = 0.9),
-      autoRelease = !gated)
+        minTokens = 3, minQuality = 0.1, nearDupThreshold = 0.9))
     val out =
       if (!gated) res.corpus
       else {
@@ -2117,16 +2109,13 @@ object TextQueries {
         // anti-join under the parity gate.
         val reExact = Dedup.exactByFingerprint(refiltered, "text", "doc_id")
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        graft.core.Frames.own(s, reExact)
         val rePairs = Dedup.minhashLshPairs(reExact, "text", "doc_id",
           shingleN = 3, threshold = 0.9)
         val reDrop = Dedup.connectedComponents(rePairs)
           .where(col("id") =!= col("label")).select("id")
         val reCorpus = reExact.join(reDrop,
           reExact("doc_id") === reDrop("id"), "left_anti").select("doc_id")
-        // Registered AFTER connectedComponents' eager edge collect —
-        // includes the pipeline's own caches (autoRelease = false above):
-        // everything releases on the gated query's consuming action.
-        graft.core.Frames.releaseAfterNextAction(s, (reExact +: res.cached): _*)
         Gates.setParity(res.corpus, reCorpus, "doc_id")
       }
     out.select(col("doc_id"), col("n_tokens").cast("long").as("n_tokens"),
@@ -2256,12 +2245,6 @@ object TextQueries {
           "doc_id")
         Gates.setParity(res.corpus, reKept, "doc_id")
       }
-    // The shared signature/pair persists are dead once this query's
-    // action ran (the pipeline consumed them eagerly; the gate's reuse is
-    // inside the plan built above) — release them rather than leak caches
-    // per call.
-    graft.core.Frames.releaseAfterNextAction(s,
-      (res.minhashSig +: res.paraPairs.toSeq): _*)
     out.select(col("doc_id"),
         TextFns.tokenCount(col("text")).cast("long").as("n_tokens"))
       .orderBy("doc_id")
@@ -2318,10 +2301,8 @@ object TextQueries {
       }
     // dedupeBatch's heavy work (probes, appends, drop-set checkpoints)
     // ran EAGERLY above; the frames returned here only re-read docs for
-    // the final anti-joins. Release the shared persists after the action
-    // that consumes this query — not before (the passes above already
-    // completed, so registration here cannot fire early).
-    graft.core.Frames.releaseAfterNextAction(s, docs, sig)
+    // the final anti-joins. The build owns the shared persists.
+    graft.core.Frames.own(s, docs, sig)
     // The index dirs are likewise DEAD already: every index read/write
     // happened inside the eager dedupeBatch passes, and the returned
     // frames anti-join only the localCheckpoint'd drop-sets. Delete the

@@ -435,10 +435,8 @@ object WebQueries {
         web = CrawlPipeline.WebConfig(blockedHosts = blocked, domainCap = cap),
         release = ReleasePipeline.Config())
       val out =
-        if (!gated) {
-          graft.core.Frames.releaseAfterNextAction(s, res.release.minhashSig)
-          res.release.corpus
-        } else {
+        if (!gated) res.release.corpus
+        else {
           // the closed-form expected extraction: the page is one <p>
           // block under a constant title, so extracted text = "t\n" +
           // the text with ALL whitespace runs collapsed to single
@@ -456,8 +454,6 @@ object WebQueries {
           val reRel = ReleasePipeline.run(
             reCleaned.select(col("doc_id"), col("text")), bench,
             ReleasePipeline.Config())
-          graft.core.Frames.releaseAfterNextAction(s,
-            res.release.minhashSig, reRel.minhashSig)
           Gates.setParity(res.release.corpus, reRel.corpus, "doc_id")
         }
       out.select(col("doc_id"),

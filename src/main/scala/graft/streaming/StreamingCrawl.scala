@@ -141,10 +141,13 @@ object StreamingCrawl {
       .foreachBatch { (b: DataFrame, id: Long) =>
         // snapshot the micro-batch first: appendBatch takes many
         // actions, and each would otherwise re-run the whole
-        // parse → extract → state-replay plan behind `b`
-        val snap = b.select("doc_id", "text").localCheckpoint(true)
-        try { appender.processBatch(snap, id); () }
-        finally { snap.unpersist(); () }
+        // parse → extract → state-replay plan behind `b`. The micro-batch
+        // is one build, snapshot included: processBatch joins it, and the
+        // next micro-batch frees both.
+        graft.core.Frames.owned(b.sparkSession) {
+          appender.processBatch(b.select("doc_id", "text").localCheckpoint(true), id)
+        }
+        ()
       }
       .start()
 }

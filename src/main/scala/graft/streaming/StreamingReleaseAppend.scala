@@ -130,19 +130,23 @@ final class StreamingReleaseAppend(
       corpusStore.read(spark), registryStore.read(spark))
 
   /** One micro-batch: append `batch` against the current store state.
+    * The micro-batch is one build ([[graft.core.Frames.owned]]): opening
+    * it frees the previous batch's persists and checkpoints, so a long
+    * stream holds at most one batch's blocks.
     * @return true if the batch was processed, false if its id had
     * already committed (re-delivery).
     */
   def processBatch(batch: DataFrame, batchId: Long): Boolean = {
     val spark = batch.sparkSession
-    if (registryStore.committed(spark, batchId)) false
-    else {
-      val res = ReleasePipeline.appendBatch(
-        currentPrior(spark), batch, benchmark, cfg)
-      corpusStore.append(res.newKept.select("doc_id", "text"), batchId)
-      registryStore.append(res.registryNew.select("id", "sig", "fp"), batchId)
-      res.cached.foreach(_.unpersist())
-      true
+    graft.core.Frames.owned(spark) {
+      if (registryStore.committed(spark, batchId)) false
+      else {
+        val res = ReleasePipeline.appendBatch(
+          currentPrior(spark), batch, benchmark, cfg)
+        corpusStore.append(res.newKept.select("doc_id", "text"), batchId)
+        registryStore.append(res.registryNew.select("id", "sig", "fp"), batchId)
+        true
+      }
     }
   }
 

@@ -2,63 +2,68 @@ package graft
 
 import org.apache.spark.storage.StorageLevel
 
-/** The deterministic cache-release listener is load-bearing (every
-  * prefix/guard/containment operator leans on it) — pin its contract
-  * directly: frames stay cached through the consuming action and are
-  * unpersisted right after it.
+import graft.core.Frames
+
+/** The build lifetime every persist and stage checkpoint rides on: a
+  * build owns the frames handed to it and the RDDs checkpointed while it
+  * runs, they answer any number of actions, and the next build frees
+  * them before it runs — synchronously, so no test here waits.
   */
 class FramesSpec extends SparkSuite {
 
-  private def eventually[A](assertion: => A, timeoutMs: Long = 20000): A = {
-    val deadline = System.currentTimeMillis() + timeoutMs
-    var last: Either[Throwable, A] = Left(new AssertionError("not attempted"))
-    while (System.currentTimeMillis() < deadline) {
-      try return assertion
-      catch { case t: org.scalatest.exceptions.TestFailedException =>
-        last = Left(t); Thread.sleep(100) }
+  private def checkpointedIds =
+    spark.sparkContext.getPersistentRDDs.filter(_._2.isCheckpointed).keySet.toSet
+
+  test("owned frames stay cached through any number of actions; the next build unpersists them") {
+    val df = Frames.owned(spark) {
+      val df = spark.range(1000).toDF("id").persist(StorageLevel.MEMORY_AND_DISK)
+      Frames.own(spark, df)
+      df
     }
-    last.fold(throw _, identity)
+    assert(df.count() === 1000L)
+    assert(df.count() === 1000L)
+    assert(df.storageLevel !== StorageLevel.NONE)
+    Frames.owned(spark)(())
+    assert(df.storageLevel === StorageLevel.NONE)
+    assert(df.count() === 1000L) // a freed persist recomputes
   }
 
-  test("releaseAfterNextAction unpersists exactly after the next completed action") {
-    val df = spark.range(1000).toDF("id").persist(StorageLevel.MEMORY_AND_DISK)
-    df.count()                                           // materialize the cache
-    assert(df.storageLevel !== StorageLevel.NONE)
-    graft.core.Frames.releaseAfterNextAction(spark, df)
-    // no action since registration -> still cached (listener is one-shot,
-    // armed but not fired)
-    Thread.sleep(300)
-    assert(df.storageLevel !== StorageLevel.NONE)
-    spark.range(10).count()                              // ANY next action fires it
-    eventually { assert(df.storageLevel === StorageLevel.NONE) }
+  test("a build frees the checkpoints made while it ran, none made outside it") {
+    val pre = spark.range(11).toDF("x").localCheckpoint(true)
+    val before = checkpointedIds
+    val cp = Frames.owned(spark)(spark.range(50).toDF("x").localCheckpoint(true))
+    val mine = checkpointedIds -- before
+    val post = spark.range(13).toDF("x").localCheckpoint(true)
+    assert(mine.nonEmpty)
+    assert(cp.count() === 50L && cp.count() === 50L)
+    Frames.owned(spark)(())
+    assert(mine.intersect(checkpointedIds).isEmpty)
+    assert(pre.count() === 11L)
+    assert(post.count() === 13L)
   }
 
-  test("an action completed just before registration cannot fire the release") {
-    val df = spark.range(800).toDF("id").persist(StorageLevel.MEMORY_AND_DISK)
+  test("a frame handed over between builds goes to the last build opened") {
+    Frames.owned(spark)(())
+    val df = spark.range(300).toDF("id").persist(StorageLevel.MEMORY_AND_DISK)
     df.count()
-    // An eager "probe" action that completes immediately before
-    // registration — its async listener event must NOT be delivered to the
-    // new listener (Frames drains the bus before registering).
-    spark.range(100).count()
-    graft.core.Frames.releaseAfterNextAction(spark, df)
-    Thread.sleep(500) // window for a stale event to (wrongly) deliver
+    Frames.own(spark, df)
     assert(df.storageLevel !== StorageLevel.NONE)
-    spark.range(10).count() // first post-registration action fires it
-    eventually { assert(df.storageLevel === StorageLevel.NONE) }
+    Frames.owned(spark)(())
+    assert(df.storageLevel === StorageLevel.NONE)
   }
 
-  test("release is one-shot: later persists of the same plan are untouched") {
-    val df = spark.range(500).toDF("id").persist(StorageLevel.MEMORY_AND_DISK)
-    df.count()
-    graft.core.Frames.releaseAfterNextAction(spark, df)
-    spark.range(10).count()
-    eventually { assert(df.storageLevel === StorageLevel.NONE) }
-    // re-persist: the already-fired (unregistered) listener must not touch it
-    df.persist(StorageLevel.MEMORY_AND_DISK)
-    df.count()
-    spark.range(10).count()
-    Thread.sleep(500)
-    assert(df.storageLevel !== StorageLevel.NONE)
-    df.unpersist()
+  test("an owned call inside a running build joins it instead of freeing it") {
+    val before = checkpointedIds
+    val (outer, inner) = Frames.owned(spark) {
+      val outer = spark.range(20).toDF("x").localCheckpoint(true)
+      val inner = Frames.owned(spark)(spark.range(30).toDF("x").localCheckpoint(true))
+      assert(outer.count() === 20L) // the nested call freed nothing
+      (outer, inner)
+    }
+    val mine = checkpointedIds -- before
+    assert(mine.size >= 2)
+    assert(outer.count() === 20L && inner.count() === 30L)
+    Frames.owned(spark)(())
+    assert(mine.intersect(checkpointedIds).isEmpty)
   }
 }

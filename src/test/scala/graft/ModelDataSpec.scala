@@ -87,6 +87,25 @@ class ModelDataSpec extends SparkSuite {
     assert(zero === Map("web" -> 0L, "missing" -> 0L))
   }
 
+  test("mixtureAllocation broadcasts the availability side of its left join (BuildRight)") {
+    val avail = Seq(("web", 1000L), ("code", 150L)).toDF("stratum", "n_tokens")
+    // size-based broadcast off: only the hint can plan a broadcast join,
+    // and Spark honours it only on the non-preserved (right) side
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try {
+      val df = graft.operators.Sampling.mixtureAllocation(avail, "stratum",
+        "n_tokens", Map("web" -> 0.5, "code" -> 0.5), budget = 100L)
+      df.collect() // finalize the adaptive plan
+      val finalPlan = df.queryExecution.executedPlan.toString
+        .split("== Initial Plan ==").head
+      val bhj = finalPlan.linesIterator.filter(_.contains("BroadcastHashJoin")).toList
+      assert(bhj.size === 1, finalPlan)
+      assert(bhj.head.contains("LeftOuter") && bhj.head.contains("BuildRight"), bhj.head)
+    } finally spark.conf.set(key, prev)
+  }
+
   test("termDrift: hand-computed JS contributions, one-sided terms contribute p/2, minCount thins") {
     val a = Seq((1L, "x x y")).toDF("doc_id", "text")   // totals: x=2, y=1 (3)
     val b = Seq((2L, "x z")).toDF("doc_id", "text")     // totals: x=1, z=1 (2)

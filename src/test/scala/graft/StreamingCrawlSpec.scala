@@ -146,7 +146,6 @@ class StreamingCrawlSpec extends SparkSuite {
       // restart: no new files, no state change
       drain()
       assert(docSet(sink.currentPrior(spark).corpus) === docSet(r2.corpus))
-      (r1.cached ++ r2.cached).foreach(_.unpersist())
     }
   }
 }

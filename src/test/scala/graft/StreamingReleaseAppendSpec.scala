@@ -62,7 +62,32 @@ class StreamingReleaseAppendSpec extends SparkSuite {
     val recovered = sink.currentPrior(spark)
     assert(regSet(recovered.minhashSig) === regSet(r2.minhashSig))
     assert(docSet(recovered.corpus) === docSet(r2.corpus))
-    (r1.cached ++ r2.cached).foreach(_.unpersist())
+  }
+
+  test("each micro-batch frees the previous one's blocks: holdings do not grow with the batch count") {
+    val docs0 = Tables(spark, sf("sf0.001"), "documents")
+      .where(col("text").isNotNull)
+    val benchmark = docs0.where(pmod(col("doc_id"), lit(10)) === 0)
+    val cfg = ReleasePipeline.Config(packCapacity = 256L)
+    val rel = ReleasePipeline.run(docs0.where(pmod(col("doc_id"), lit(5)) === 0),
+      benchmark, cfg)
+    val sink = new StreamingReleaseAppend(
+      Files.createTempDirectory("stream_rel_held").toString + "/state", benchmark, cfg)
+    sink.initPrior(rel.toPrior)
+    // Strong references to every persisted RDD seen: only an explicit
+    // unpersist can drop one, not GC-driven ContextCleaner cleanup.
+    val seen = scala.collection.mutable.Map.empty[Int, org.apache.spark.rdd.RDD[_]]
+    val before = spark.sparkContext.getPersistentRDDs.size
+    val held = (1 to 4).map { k =>
+      assert(sink.processBatch(docs0.where(pmod(col("doc_id"), lit(5)) === k), k.toLong))
+      val live = spark.sparkContext.getPersistentRDDs
+      seen ++= live
+      live.size
+    }
+    // a batch keeps its own blocks until the next one opens...
+    assert(held.head > before, s"before=$before held=$held")
+    // ...and never more: batch N holds what batch 1 held, whatever N is
+    assert(held.forall(_ <= held.head), s"before=$before held=$held")
   }
 
   test("AvailableNow file stream drives the sink to the equivalent chain state") {
@@ -115,6 +140,5 @@ class StreamingReleaseAppendSpec extends SparkSuite {
       maxFilesPerTrigger = 1)
     q2.awaitTermination()
     assert(docSet(sink.currentPrior(spark).corpus) === docSet(r2.corpus))
-    (r1.cached ++ r2.cached).foreach(_.unpersist())
   }
 }
