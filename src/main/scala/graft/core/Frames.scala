@@ -11,10 +11,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * ([[graft.streaming.StreamingReleaseAppend.processBatch]]). Operators
   * that persist a shared intermediate (a shingle or term-frequency frame
   * several stages of one returned plan consume) hand it over with
-  * [[own]] and stop tracking it. Eager stage boundaries
-  * (`localCheckpoint(true)`) need no hand-over: their blocks are raw RDD
-  * persists, invisible to `DataFrame.unpersist`, and a build owns every
-  * RDD checkpointed while its body runs.
+  * [[own]] and stop tracking it. Eager cuts ([[Stages]]) need no
+  * hand-over: a build owns every RDD checkpointed while its body runs.
   *
   * Contract: the frames a build returns answer any number of actions,
   * and a retry after a failed action, until the next build opens. So do

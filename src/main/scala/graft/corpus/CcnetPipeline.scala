@@ -3,6 +3,7 @@ package graft.corpus
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Stages
 import graft.operators.{LangId, LmScore, Paragraphs, Sampling}
 import graft.streaming.StreamingParagraphDedup.ParagraphRegistry
 
@@ -106,25 +107,17 @@ object CcnetPipeline {
       case Incremental(registry, batchId) =>
         registry.dedupeBatch(classified0, textCol, idCol, "lang", batchId)
     }
-    // Stage boundaries are EAGER localCheckpoints, not persists (the
-    // ReleasePipeline idiom, r17): a persist caches EXECUTION but leaves
-    // the stage's full logical plan embedded in every downstream
-    // operator, and the crawl-fed compositions (q160/q164/q166) carry
-    // fixture/extraction expression trees large enough that per-action
-    // re-analysis + canonicalization dominated the driver (thread dumps
-    // showed the main thread RUNNABLE in CheckAnalysis/canonicalized
-    // between jobs; q164 spent ~12s of 35s outside any Spark job).
-    // localCheckpoint cuts each stage to a leaf: downstream plans stay
-    // O(stage) for the analyzer AND the executor. The blocks belong to
-    // the current build ([[graft.core.Frames]]): the next build frees
-    // them.
-    // The Incremental registry's dedupeBatch already returns an eager
-    // localCheckpoint(true) leaf (StreamingParagraphDedup) — re-
-    // checkpointing it would be a second full materialization and a
-    // duplicate block copy per batch, so that case passes through.
+    // Stage boundaries are eager cuts, not persists ([[graft.core.Stages]]):
+    // the crawl-fed compositions (q160/q164/q166) carry expression trees
+    // large enough that per-action re-analysis of an embedded plan
+    // dominated the driver (q164 spent ~12s of 35s outside any Spark
+    // job). The Incremental registry's dedupeBatch already returns a cut
+    // (StreamingParagraphDedup); cutting it again would be a second full
+    // materialization and a duplicate block copy per batch, so that case
+    // passes through.
     val classified = cfg.dedup match {
       case Incremental(_, _) => deduped
-      case _ => deduped.localCheckpoint(true)
+      case _ => Stages.cut(deduped)
     }
     val scored0 =
       if (cfg.lmOrder == 1) {
@@ -139,14 +132,12 @@ object CcnetPipeline {
           tri, bi, uni, cfg.lambda1, cfg.lambda2, cfg.pFloor,
           logFloor = cfg.oovLogp)
       }
-    val scored = scored0
+    val scored = Stages.cut(scored0
       .select(col("id").as(idCol), col("stratum").as("lang"),
-        round(col("mean_logp"), 6).as("mean_logp"), col("n_tokens"))
-      .localCheckpoint(true)
-    val tiered = Sampling.percentileBuckets(scored, "lang", idCol,
+        round(col("mean_logp"), 6).as("mean_logp"), col("n_tokens")))
+    val tiered = Stages.cut(Sampling.percentileBuckets(scored, "lang", idCol,
         "mean_logp", cfg.tiers)
-      .where(col("tier").isInCollection(cfg.keepTiers))
-      .localCheckpoint(true)
+      .where(col("tier").isInCollection(cfg.keepTiers)))
     val budgeted = cfg.budgetStage match {
       case Some(f) => f(tiered)
       case None => Sampling.byTokenBudget(tiered, "lang", idCol,

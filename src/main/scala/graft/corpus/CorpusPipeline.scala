@@ -2,6 +2,7 @@ package graft.corpus
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.core.Stages
 import graft.functions.TextFns
 import graft.operators.Dedup
 
@@ -49,15 +50,16 @@ object CorpusPipeline {
 
   def run(docs: DataFrame, cfg: Config = Config()): Result = {
     val input = docs.where(c(cfg.textCol).isNotNull)
-    val annotated = annotate(input, cfg).cache()
-
-    val filtered = annotated
-      .where(col("n_tokens") >= cfg.minTokens && col("quality") >= cfg.minQuality)
-      .cache()
+    // Stage boundaries ([[graft.core.Stages]]): the annotation's one
+    // consumer is the quality filter, so it is fused into the filter's
+    // cut; the filter and exact-dedup frames are read again by the stats
+    // and the pair search.
+    val filtered = Stages.cut(annotate(input, cfg)
+      .where(col("n_tokens") >= cfg.minTokens && col("quality") >= cfg.minQuality))
 
     // Exact dedup: keep min-id representative per normalized fingerprint.
-    val exact = Dedup.keepFirst(filtered, Seq("fingerprint"), Seq(c(cfg.idCol).asc))
-      .cache()
+    val exact = Stages.cut(
+      Dedup.keepFirst(filtered, Seq("fingerprint"), Seq(c(cfg.idCol).asc)))
 
     // Near-dup clusters: LSH-blocked pairs -> connected components -> keep
     // the cluster-min id.
@@ -72,9 +74,6 @@ object CorpusPipeline {
       afterQuality = filtered.count(),
       afterExactDedup = exact.count(),
       afterNearDedup = corpus.count())
-    // Repeated run() invocations must not accumulate session-lifetime
-    // cache entries (round-4 finding): the build owns the stage caches.
-    graft.core.Frames.own(docs.sparkSession, annotated, filtered, exact)
     Result(corpus, stats)
   }
 }

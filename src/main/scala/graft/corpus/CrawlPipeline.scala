@@ -3,6 +3,7 @@ package graft.corpus
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.Stages
 import graft.functions.{HtmlTextExpr, UrlFns}
 import graft.operators.Domains
 import graft.sources.Warc
@@ -146,20 +147,19 @@ object CrawlPipeline {
     else Domains.perDomainCap(urlDeduped, "host", "doc_id", cfg.domainCap)
   }
 
-  /** Run the whole crawl-to-release workflow. Stage boundaries after
-    * the parse kernel and after the web stages are eager
-    * `localCheckpoint`s (the ReleasePipeline rationale: the web-clean
-    * frames are consumed by both the release battery and the stats
-    * counts, and the parse kernel is the single most expensive scan —
-    * nothing downstream should ever re-run it).
+  /** Run the whole crawl-to-release workflow. The stage boundaries after
+    * the parse kernel and after the web stages are eager cuts
+    * ([[graft.core.Stages]]): the web-clean frames are consumed by both
+    * the release battery and the stats counts, and the parse kernel is
+    * the single most expensive scan.
     */
   def run(files: DataFrame, benchmark: DataFrame,
           docId: Column = xxhash64(col("record_id")),
           web: WebConfig = WebConfig(),
           release: ReleasePipeline.Config = ReleasePipeline.Config()): Result = {
-    val pages = pageDocs(files, docId).localCheckpoint(true)
+    val pages = Stages.cut(pageDocs(files, docId))
     val unblocked = Domains.applyBlocklist(pages, "host", web.blockedHosts)
-    val cleaned = webClean(pages, web).localCheckpoint(true)
+    val cleaned = Stages.cut(webClean(pages, web))
     val rel = ReleasePipeline.run(
       cleaned.select(col("doc_id"), col("text")), benchmark, release)
     Result(cleaned, rel,

@@ -163,17 +163,12 @@ object ReleasePipeline {
     val id = col(s"`${cfg.idCol}`")
     val input = docs.where(col(s"`${cfg.textCol}`").isNotNull)
 
-    // Stage dirs are keyed by NAME only, so a resumed run must prove it
-    // is the SAME build: a `_manifest.json` (config + input/benchmark/
-    // reference fingerprints) is written before any stage and checked on
-    // every subsequent run against the dir. A mismatch means the caller
-    // changed semantics under an old checkpoint — resuming would splice
-    // old-config stage outputs into a new-config build with no error
-    // (silent wrong output), so we fail loudly instead.
-    checkpointDir.foreach { d =>
-      checkOrWriteManifest(docs.sparkSession, d,
-        manifest(cfg, input, benchmark, noveltyRef))
-    }
+    // Stage boundaries ([[graft.core.Stages]]); with a checkpoint dir the
+    // manifest (config + input/benchmark/reference fingerprints) guards
+    // the resume before any stage runs.
+    val stages = graft.core.Stages(docs.sparkSession, checkpointDir)(
+      manifest(cfg, input, benchmark, noveltyRef))
+    import stages.{fused, staged}
 
     // 0. Acquisition novelty floor — drop docs the existing release
     // already covers. Anti-join on the DROP set so gram-less docs (no
@@ -189,10 +184,6 @@ object ReleasePipeline {
           .where(col("novelty") < cfg.noveltyMin).select("id")
         input.join(redundant, id === redundant("id"), "left_anti")
     }
-
-    // Stage boundaries: see [[Boundaries]].
-    val boundaries = new Boundaries(docs.sparkSession, checkpointDir)
-    import boundaries.{fused, staged}
 
     // 1. PII scrub — pure projection, row count unchanged.
     val scrubbed = staged("1_scrub", acquired.select(id.as("doc_id"),
@@ -519,12 +510,9 @@ object ReleasePipeline {
     val input = batch.where(col(s"`${cfg.textCol}`").isNotNull)
     val spark = batch.sparkSession
 
-    checkpointDir.foreach { d =>
-      checkOrWriteManifest(spark, d,
-        appendManifest(cfg, input, benchmark, prior))
-    }
-    val boundaries = new Boundaries(spark, checkpointDir)
-    import boundaries.{fused, staged}
+    val stages = graft.core.Stages(spark, checkpointDir)(
+      appendManifest(cfg, input, benchmark, prior))
+    import stages.{fused, staged}
 
     require(prior.minhashSig.columns.contains("fp"),
       "appendBatch: the prior registry must carry (id, sig, fp) rows — " +
@@ -721,76 +709,4 @@ object ReleasePipeline {
 
   /** JSON string escape for manifest values. */
   private def esc(s: String) = s.replace("\\", "\\\\").replace("\"", "\\\"")
-
-  /** The stage boundaries of one [[run]] or [[appendBatch]] build.
-    *
-    * Each `staged` boundary is an EAGER localCheckpoint, for two
-    * compounding reasons. (1) Reuse: later stages, the eager edge
-    * collects, and the stage-count stats each consume the frame again —
-    * without materialization every consumer re-runs the whole upstream
-    * cascade (LSH + span index + paragraph routing several times over).
-    * (2) Lineage truncation: a persist alone leaves each stage's plan
-    * EMBEDDED in the next one's, and stages that reference their input
-    * twice (every join-with-derived-drop-set here) DOUBLE the plan tree
-    * per stage — by stage 7 the driver spends minutes stringifying
-    * exponential plan trees for listener events, dwarfing execution.
-    * localCheckpoint cuts the subtree to a leaf: plans stay O(stage),
-    * which is also what keeps Catalyst/AQE planning time bounded on a
-    * real cluster. The blocks belong to the current build
-    * ([[graft.core.Frames]]): the next build frees them.
-    *
-    * Single-consumer boundaries (`fused`): with the stats counts lazy,
-    * some stage frames have exactly ONE live consumer — the next stage.
-    * Materializing those buys no reuse and costs a full job + block
-    * round-trip each, so the in-memory path fuses them into the next
-    * stage's materialization (plan depth stays O(2 stages) — the next
-    * boundary truncates).
-    *
-    * With `checkpointDir` every boundary, `fused` ones included, is
-    * DURABLE parquet instead (read-or-compute): same reuse and lineage
-    * truncation, plus a crashed run resumes from its last completed
-    * stage — resume granularity is the point there. The stage body is
-    * by-name so a resumed stage skips its eager work (the CC edge
-    * collects, the LM cut) entirely.
-    */
-  private final class Boundaries(spark: org.apache.spark.sql.SparkSession,
-                                 checkpointDir: Option[String]) {
-    def staged(name: String, df: => DataFrame): DataFrame =
-      checkpointDir match {
-        case Some(d) => graft.sources.Checkpoint.readOrCompute(spark, s"$d/$name")(df)
-        case None => df.localCheckpoint(true)
-      }
-    def fused(name: String, df: => DataFrame): DataFrame =
-      checkpointDir match {
-        case Some(d) => graft.sources.Checkpoint.readOrCompute(spark, s"$d/$name")(df)
-        case None => df
-      }
-  }
-
-  /** First run against `dir` records the manifest (temp-file + rename so
-    * a crash mid-write leaves no half manifest); later runs must match
-    * it exactly or the build refuses to resume.
-    */
-  private def checkOrWriteManifest(spark: org.apache.spark.sql.SparkSession,
-      dir: String, expected: String): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val path = new org.apache.hadoop.fs.Path(dir, "_manifest.json")
-    if (fs.exists(path)) {
-      val in = fs.open(path)
-      val found = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-                  finally in.close()
-      if (found != expected) throw new IllegalStateException(
-        s"Release checkpoint dir $dir was built by a DIFFERENT run — " +
-        "resuming would mix stage outputs across configs/inputs. " +
-        s"Clear the dir or use a fresh one.\n--- recorded ---\n$found\n" +
-        s"--- this run ---\n$expected")
-    } else {
-      val tmp = new org.apache.hadoop.fs.Path(dir, "_manifest.json.tmp")
-      val out = fs.create(tmp, true)
-      try out.write(expected.getBytes("UTF-8")) finally out.close()
-      if (!fs.rename(tmp, path) && !fs.exists(path))
-        throw new java.io.IOException(s"could not commit manifest at $path")
-    }
-  }
 }

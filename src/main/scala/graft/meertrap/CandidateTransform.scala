@@ -2,7 +2,7 @@ package graft.meertrap
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.core.UnexpectedShapeException
+import graft.core.{Stages, UnexpectedShapeException}
 import graft.functions.{Coordinates, TimeFns}
 import graft.operators.{AsOf, Dedup, Ids}
 
@@ -87,10 +87,10 @@ object CandidateTransform {
       rightCols = Seq("beam_id"))
       .drop("cand.beam_key", "cand.coherent_key", "cand.observed_at_rounded",
         "cand.beam", "cand.coherent")
-    // Eager boundary (lineage truncation, as in ObservationTransform):
-    // the invariant check and every downstream consumer read the
-    // materialized join instead of re-planning the as-of subtree.
-    val out = joined.localCheckpoint(true)
+    // Eager cut ([[graft.core.Stages]]): the invariant check and every
+    // downstream consumer read the materialized join instead of
+    // re-planning the as-of subtree.
+    val out = Stages.cut(joined)
     // Both reference invariants from ONE action over the checkpointed
     // frame (row count + null-beam count), not two.
     val stats = out.agg(

@@ -13,9 +13,11 @@ import org.apache.spark.sql.SparkSession
   *
   * `--partition-key` narrows the scan to `DIR/KEY` when that subdirectory
   * exists (the reference's per-day layout) and is stamped into candidate
-  * file paths either way; `--out` writes each result frame as parquet
-  * under `OUT/<name>`; without it the job prints row counts (the smoke
-  * behavior of the reference's main).
+  * file paths either way; `--checkpoint` makes the parse resumable, and
+  * a checkpoint dir serves only the scan, partition key and file root
+  * that built it (another run against it fails); `--out` writes each
+  * result frame as parquet under `OUT/<name>`; without it the job prints
+  * row counts (the smoke behavior of the reference's main).
   */
 object Main {
 

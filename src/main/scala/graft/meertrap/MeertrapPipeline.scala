@@ -2,12 +2,13 @@ package graft.meertrap
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.sources.{Checkpoint, RunSummarySource, SpcclSource}
+import graft.core.Stages
+import graft.sources.{RunSummarySource, SpcclSource}
 
 /** End-to-end MeerTRAP batch pipeline (reference `meertrap/main.py:6-10` +
   * `meertrap/meertrap.py:70-205`): parse -> transform -> (load).
   *
-  * Stages are optionally checkpointed to parquet like the reference's
+  * The parse is optionally checkpointed to parquet like the reference's
   * `read_or_parse_parquet` (resumability, not just caching).
   */
 object MeertrapPipeline {
@@ -27,17 +28,13 @@ object MeertrapPipeline {
     val runSummaries = RunSummarySource.read(spark, dir)
     val spccl        = SpcclSource.read(spark, dir)
 
-    val flat = checkpointDir match {
-      case Some(cp) => Checkpoint.readOrCompute(spark, s"$cp/obs_raw")(
-        ObservationTransform.flatten(runSummaries.parsed))
-      // No checkpoint: the parse is not materialized on its own. The
-      // transform's eager stage boundaries (see the boundary note in
-      // ObservationTransform.transform) read it while they materialize;
-      // after that only the wide frame (its null-id assertion) re-reads
-      // it. Callers that need the parse itself durable pass a checkpoint
-      // dir.
-      case None => ObservationTransform.flatten(runSummaries.parsed)
-    }
+    // The parse is fused ([[graft.core.Stages]]): without a checkpoint
+    // dir it is not materialized on its own. The transform's cuts read it
+    // while they materialize; after that only the wide frame (its null-id
+    // assertion) re-reads it. With a dir it is durable, and the manifest
+    // refuses to resume it for a different scan.
+    val stages = Stages(spark, checkpointDir)(manifest(spark, dir, fileRoot, partitionKey))
+    val flat = stages.fused("obs_raw", ObservationTransform.flatten(runSummaries.parsed))
 
     val obsResult = ObservationTransform.transform(flat)
 
@@ -51,6 +48,20 @@ object MeertrapPipeline {
       spccl.parsed, obsBeams, fileRoot, partitionKey)
 
     Output(obsResult, cands, runSummaries.corrupt, spccl.quarantined)
+  }
+
+  /** What a checkpoint dir's stages were built from: the scan dir
+    * (qualified, so a relative and an absolute spelling agree), the
+    * partition key and the file root. Read off the arguments; no job.
+    */
+  private def manifest(spark: SparkSession, dir: String, fileRoot: String,
+                       partitionKey: String): String = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val scan = p.getFileSystem(spark.sparkContext.hadoopConfiguration).makeQualified(p)
+    def q(v: String) = "\"" + v.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+    s"""{"scan": ${q(scan.toString)},
+       | "partitionKey": ${q(partitionKey)},
+       | "fileRoot": ${q(fileRoot)}}""".stripMargin
   }
 
   /** The reference's own smoke query (`README.md:50-54`):

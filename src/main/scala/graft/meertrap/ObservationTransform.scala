@@ -3,7 +3,7 @@ package graft.meertrap
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.core.Asserts
+import graft.core.{Asserts, Stages}
 import graft.functions.{Coordinates, Physics, TimeFns}
 import graft.operators.{Dedup, Ids}
 
@@ -254,19 +254,10 @@ object ObservationTransform {
     */
   def transform(flatIn: DataFrame): Result = {
     // The MeerTRAP stage boundaries (sb, obsUniq, obs, beams here; the
-    // as-of join in CandidateTransform.attachBeamIds) are EAGER
-    // localCheckpoints, for the lineage-truncation reason documented at
-    // the stage boundaries of ReleasePipeline.run. A `.cache()` would
-    // leave each stage's plan embedded in the next one, and sbDf,
-    // cbConfigDf, Ids.denseId and the joins below reference their input
-    // twice, so the plan doubles per stage: with cached stages the plan
-    // printed for the metrics collect reached 65.8M characters, and
-    // stringifying and re-analyzing plans took most of the ingest's time.
-    // A checkpoint cuts each stage to a LogicalRDD leaf. Measured on a
-    // 4-core VM, ~250 candidate dirs: the ingest's wall time went from
-    // ~72s with cached stages to ~22s, the metrics collect from ~34s to
-    // ~1.4s.
-    val sb = sbDf(flatIn).localCheckpoint(true)
+    // as-of join in CandidateTransform.attachBeamIds) are eager cuts, not
+    // `.cache()`: sbDf, cbConfigDf, Ids.denseId and the joins below
+    // reference their input twice. See [[graft.core.Stages]].
+    val sb = Stages.cut(sbDf(flatIn))
 
     val base = flatIn.select(
       col("filename"), c("sb.start_at"), c("obs.t_min"), c("obs.t_max"),
@@ -279,10 +270,10 @@ object ObservationTransform {
       broadcast(sb.select(c("sb.start_at"), c("sb.est_end_at"))),
       Seq("sb.start_at"), "left")
 
-    val obsUniq = Dedup.keepFirst(flatWithEst, Seq("obs.t_min"),
-      Seq(c("obs.t_max").asc_nulls_last, col("filename").asc)).localCheckpoint(true)
+    val obsUniq = Stages.cut(Dedup.keepFirst(flatWithEst, Seq("obs.t_min"),
+      Seq(c("obs.t_max").asc_nulls_last, col("filename").asc)))
 
-    val obs    = obsDf(obsUniq, sb).localCheckpoint(true)
+    val obs    = Stages.cut(obsDf(obsUniq, sb))
     val cbCfg  = cbConfigDf(obsUniq)
     val tiling = tilingDf(obsUniq, obs)
 
@@ -302,7 +293,7 @@ object ObservationTransform {
       .withColumn("obs.t_max", c("obs.t_max_enriched"))
       .drop("obs.t_max_enriched", "beams.host_beams_enriched", "schedule_block_id_enriched")
 
-    val beams = beamDf(wide0).localCheckpoint(true)
+    val beams = Stages.cut(beamDf(wide0))
     val hosts = hostDf(beams)
     val beamsWithHost = beams.join(broadcast(hosts),
       Seq("host.ip_address", "host.hostname", "host.port"), "left")

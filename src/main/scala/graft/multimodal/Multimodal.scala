@@ -2,6 +2,7 @@ package graft.multimodal
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.Stages
 
 /** Multimodal column plumbing: image/audio/video as opaque `binary` columns
   * with typed metadata, plus distributed decode/feature-extract scaffolding.
@@ -569,7 +570,7 @@ object Multimodal {
       everyNth: Int = 1,
       minFrameFrac: Double = 0.5): DataFrame =
     nearDupVideoPairsFromHashes(
-      videoFrameHashes(media, everyNth).localCheckpoint(true), maxDist, minFrameFrac)
+      Stages.cut(videoFrameHashes(media, everyNth)), maxDist, minFrameFrac)
 
   /** 64-bit WHOLE-video signature from a (id, frame_idx, sig) frame-hash
     * frame: bit j set iff a majority of the asset's frame hashes set bit

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.core.Stages
 import graft.functions.TextFns
 
 /** BM25 full-text retrieval over a document corpus — the lexical
@@ -229,7 +230,7 @@ object Bm25 {
       .withColumn("__rnk", row_number().over(wOrd))
       .withColumn("__sfx", sum("__ub").over(
         wOrd.rowsBetween(Window.currentRow, Window.unboundedFollowing)))
-      .localCheckpoint(true)
+      .transform(Stages.cut)
     def wExpr = col("idf") * col("tf") * lit(params.k1 + 1.0) /
       (col("tf") + lit(params.k1) *
         (lit(1.0 - params.b) + lit(params.b) * col("dl") / lit(avgdl)))
@@ -287,7 +288,7 @@ object Bm25 {
         col("__theta").isNull || col("__sfx") >= col("__theta") - lit(2e-6))
       .withColumn("__floor", floorExpr)
       .select("query_id", "term", "idf", "__ess", "__floor")
-      .localCheckpoint(true)
+      .transform(Stages.cut)
     val ess = split.where(col("__ess")).select("query_id", "term", "idf")
     val non = split.where(!col("__ess")).select("query_id", "term", "idf")
     // Adaptive: every posting has tf ≥ 1, so floors ≤ 1 prune nothing,

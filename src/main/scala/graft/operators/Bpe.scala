@@ -5,6 +5,7 @@ import scala.collection.mutable
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import graft.core.Stages
 
 /** Byte-Pair-Encoding vocabulary learning (Sennrich et al. 2016,
   * re-derived) — the tokenizer-training step of a data pipeline: learn
@@ -145,7 +146,7 @@ object Bpe {
         var next = dict.select(applyMergeCol(col("syms"), l, r).as("syms"), col("freq"))
         // truncate lineage periodically — each merge nests one aggregate
         // HOF, and K nested folds make analysis cost quadratic in K
-        if ((rank + 1) % 4 == 0) next = next.localCheckpoint(true)
+        if ((rank + 1) % 4 == 0) next = Stages.cut(next)
         else {
           next = next.persist(StorageLevel.MEMORY_AND_DISK)
           next.count()

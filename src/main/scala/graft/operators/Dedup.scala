@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.core.Stages
 import graft.functions.TextFns
 
 /** Deduplication operators — the reference's deterministic keep-first dedup
@@ -642,7 +643,7 @@ object Dedup {
       .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
       .cache()
     var labels = edges.select(col("src").as("id")).distinct()
-      .withColumn("label", col("id")).localCheckpoint(true)
+      .withColumn("label", col("id")).transform(Stages.cut)
     var i = 0
     var converged = false
     while (i < maxIter && !converged) {
@@ -655,13 +656,13 @@ object Dedup {
       val oneHop = labels.join(neighborMin, Seq("id"), "left")
         .select(col("id"),
           least(col("label"), coalesce(col("nbr_label"), col("label"))).as("label"))
-        .localCheckpoint(true)
+        .transform(Stages.cut)
       val next = oneHop.as("a")
         .join(oneHop.select(col("id").as("jid"), col("label").as("jlabel")).as("j"),
           col("a.label") === col("jid"), "left")
         .select(col("a.id").as("id"),
           least(col("a.label"), coalesce(col("jlabel"), col("a.label"))).as("label"))
-        .localCheckpoint(true)
+        .transform(Stages.cut)
       converged = next.join(labels.withColumnRenamed("label", "old_label"), "id")
         .where(col("label") =!= col("old_label")).limit(1).count() == 0
       labels = next

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import graft.core.Stages
 
 /** Link-graph analytics over an edge frame — the web-curation stage
   * downstream of `html_links` extraction: PageRank-style authority
@@ -126,7 +127,7 @@ object LinkGraph {
       if (i % 4 == 0 && i < iterations) {
         // eager checkpoint truncates lineage AND materializes the
         // window's caches, which are then safe to drop
-        ranks = ranks.localCheckpoint(true)
+        ranks = Stages.cut(ranks)
         iterCaches.foreach(_.unpersist(blocking = false))
         iterCaches.clear()
         tol.foreach { t =>

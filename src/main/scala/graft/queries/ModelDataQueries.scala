@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.core.Stages
 import graft.operators.{Bm25, Bpe, QualityModel, Similarity, TextStats}
 import graft.sources.Warc
 
@@ -175,7 +176,7 @@ object ModelDataQueries {
       try {
         val w = QualityModel.trainLogistic(feats, "f", "y",
           dim = QualityModel.FeatureDim, steps = 3, lr = 0.5)
-        QualityModel.fitSummary(feats, "f", "y", w).localCheckpoint(true)
+        Stages.cut(QualityModel.fitSummary(feats, "f", "y", w))
       } finally feats.unpersist()
     }),
 

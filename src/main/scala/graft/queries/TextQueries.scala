@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.core.Stages
 import graft.functions.TextFns
 import graft.operators.Dedup
 
@@ -1994,16 +1995,15 @@ object TextQueries {
     * a bare `repartition` would re-run the full-table exchange once PER
     * consuming action (measured r17→r18: +26-63% on q82/q87/q114).
     * So the spread is paid ONCE: one round-robin exchange to
-    * `defaultParallelism` partitions, materialized by an eager
-    * `localCheckpoint` that every consuming action then reads as a
+    * `defaultParallelism` partitions, materialized by an eager cut
+    * ([[graft.core.Stages]]) that every consuming action then reads as a
     * LogicalRDD leaf (no re-scan, no re-exchange, lineage cut at the
     * load). A production corpus is a many-file directory where the scan
     * parallelizes by itself; there the exchange only rebalances.
     */
   private def spreadDocs(s: SparkSession, dir: String): DataFrame =
-    Tables(s, dir, "documents")
-      .repartition(s.sparkContext.defaultParallelism)
-      .localCheckpoint(true)
+    Stages.cut(Tables(s, dir, "documents")
+      .repartition(s.sparkContext.defaultParallelism))
 
   private def mkQ87(gated: Boolean): Q = (s, dir) => {
     import graft.corpus.ReleasePipeline
@@ -2173,33 +2173,30 @@ object TextQueries {
     val out =
       if (!gated) res.corpus
       else {
-        // Eager stage-boundary checkpoints, same shape (and same
-        // rationale — see ReleasePipeline.run) as the pipeline under
-        // test: the recompose consumes each frame more than once and an
-        // un-truncated 8-stage lineage makes driver plan handling, not
-        // execution, the cost.
-        def staged(df: org.apache.spark.sql.DataFrame) = df.localCheckpoint(true)
+        // Eager cuts at the pipeline's stage boundaries
+        // ([[graft.core.Stages]]): the recompose consumes each frame more
+        // than once.
         val input = cand.where(col("text").isNotNull)
         val redundant = Decontaminate.noveltyScore(input, "text", "doc_id",
             ref.where(col("text").isNotNull), "text", n = cfg.noveltyN)
           .where(col("novelty") < cfg.noveltyMin).select("id")
         val acq = input.join(redundant, input("doc_id") === redundant("id"),
           "left_anti")
-        val scrub = staged(
+        val scrub = Stages.cut(
           acq.select(col("doc_id"), Pii.redact(col("text")).as("text")))
         // 1b (q114 only): the recompose threads the boilerplate-line
         // stage at the same point as the pipeline — the line-df kernel
         // itself is q99-oracled, so the gate's subject stays threading.
         val lineClean =
           if (!cfg.boilerplateLineDedup) scrub
-          else staged(TextStats.removeBoilerplateLines(
+          else Stages.cut(TextStats.removeBoilerplateLines(
               scrub, "text", "doc_id", cfg.boilerplateMinDf)
             .where(length(trim(col("scrubbed"))) > 0)
             .select(col("id").as("doc_id"), col("scrubbed").as("text")))
         val qual = lineClean.join(
           TextStats.gopherVerdicts(lineClean, "text", "doc_id")
           .where(col("pass")).select(col("id").as("doc_id")), "doc_id")
-        val reExact = staged(Dedup.exactByFingerprint(qual, "text", "doc_id"))
+        val reExact = Stages.cut(Dedup.exactByFingerprint(qual, "text", "doc_id"))
         // Signature frame SHARED with the pipeline (Result.minhashSig, the
         // q57 precomputedSig pattern): the sketch kernel is pure and
         // q36-oracled, so recomputing it here would verify nothing — the
@@ -2212,7 +2209,7 @@ object TextQueries {
               shingleN = cfg.shingleN, threshold = cfg.nearDupThreshold,
               precomputedSig = Some(res.minhashSig)))
           .where(col("id") =!= col("label")).select("id")
-        val dd = staged(reExact.join(docDrop,
+        val dd = Stages.cut(reExact.join(docDrop,
           reExact("doc_id") === docDrop("id"), "left_anti"))
         // Paragraph PAIR frame SHARED with the pipeline (Result.paraPairs,
         // the same contract as the minhashSig share above): the window
@@ -2232,7 +2229,7 @@ object TextQueries {
             k = cfg.spanK)
           .where(col("n_kept") > 0)
           .select(col("id").as("doc_id"), col("scrubbed").as("text"))
-        val cln = staged(Decontaminate.clean(desp, "text", "doc_id",
+        val cln = Stages.cut(Decontaminate.clean(desp, "text", "doc_id",
           bench.where(col("text").isNotNull).select(col("text")), "text",
           n = cfg.decontaminateN))
         val scored = LmScore.scoreDocs(cln, "text", "doc_id",

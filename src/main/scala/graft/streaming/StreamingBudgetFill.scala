@@ -60,8 +60,10 @@ object StreamingBudgetFill {
   }
 
   /** Wire: group the doc stream by stratum, run the stateful fill.
-    * ProcessingTime mode — budget filling is an arrival-order concept,
-    * independent of event time.
+    * TimeMode.None — budget filling is an arrival-order concept,
+    * independent of event time, and the fill registers no timers (under
+    * `Trigger.AvailableNow` a ProcessingTime query keeps scheduling
+    * no-data micro-batches and never terminates).
     */
   def verdicts(docs: Dataset[Doc], budgets: Map[String, Long],
                defaultBudget: Long = 0L,
@@ -71,6 +73,6 @@ object StreamingBudgetFill {
       "budgets must be non-negative")
     docs.groupByKey(_.stratum)
       .transformWithState(new FillProcessor(budgets, defaultBudget, strictPrefix),
-        TimeMode.ProcessingTime(), OutputMode.Append())
+        TimeMode.None(), OutputMode.Append())
   }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming._
 
+import graft.core.Stages
 import graft.corpus.CrawlPipeline
 import graft.operators.Domains
 import graft.sources.Warc
@@ -145,7 +146,7 @@ object StreamingCrawl {
         // is one build, snapshot included: processBatch joins it, and the
         // next micro-batch frees both.
         graft.core.Frames.owned(b.sparkSession) {
-          appender.processBatch(b.select("doc_id", "text").localCheckpoint(true), id)
+          appender.processBatch(Stages.cut(b.select("doc_id", "text")), id)
         }
         ()
       }

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import graft.core.Stages
 import graft.functions.TextFns
 import graft.operators.Dedup
 
@@ -155,11 +156,11 @@ object StreamingDedup {
         .select(col("b.id").as("id")).distinct()
 
       // The drop-set (dup ids) is the small product of the batch — one job
-      // materializes it with lineage truncated (localCheckpoint), so the
+      // materializes it with lineage truncated (an eager cut), so the
       // index append and the survivor output each cost one cheap anti-join
       // instead of recomputing the index probe.
       val dropIds = dupVsIndex.union(dupInBatch).distinct()
-        .localCheckpoint(true)
+        .transform(Stages.cut)
 
       // Append survivors' band rows (partitioned by band for pruning) —
       // unless this batch id already committed (idempotent re-delivery).

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Stages
 import graft.functions.TextFns
 
 /** Incremental CCNet PARAGRAPH-HASH dedup against a persistent
@@ -152,7 +153,7 @@ object StreamingParagraphDedup {
           transform(array_sort(collect_list(struct(col("para_idx"), col("para")))),
             x => x.getField("para")), joinSep).as(textCol))
         .select(batch.columns.map(c => col(s"`$c`")): _*)
-        .localCheckpoint(true)
+        .transform(Stages.cut)
       paras.unpersist(); winners.unpersist()
       out
     }

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.Stages
 import graft.functions.{VectorExpressions, VectorFns}
 
 /** Incremental EMBEDDING near-duplicate detection against a persistent
@@ -106,7 +107,7 @@ object StreamingVectorDedup {
         .select(col("b.id").as("id")).distinct()
 
       val dropIds = dupVsIndex.union(dupInBatch).distinct()
-        .localCheckpoint(true)
+        .transform(Stages.cut)
 
       if (appendToIndex) {
         val fsys = new org.apache.hadoop.fs.Path(dir)

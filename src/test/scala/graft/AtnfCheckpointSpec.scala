@@ -4,7 +4,6 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.atnf.AtnfTransform
 import graft.load.Targets
-import graft.sources.Checkpoint
 
 class AtnfCheckpointSpec extends SparkSuite {
 
@@ -130,37 +129,5 @@ class AtnfCheckpointSpec extends SparkSuite {
         graft.atnf.CatalogueFetch.extractLiveVersioned(spark, base, "../evil", dir, visited)
       }
     } finally server.stop(0)
-  }
-
-  test("checkpoint: computes once, then reads back (reference read_or_parse_parquet)") {
-    val dir = Files.createTempDirectory("cp").toString + "/stage"
-    var computed = 0
-    def compute = {
-      computed += 1
-      spark.range(10).toDF("id")
-    }
-    val first = Checkpoint.readOrCompute(spark, dir)(compute)
-    assert(first.count() === 10 && computed === 1)
-    val second = Checkpoint.readOrCompute(spark, dir)(compute)
-    assert(second.count() === 10 && computed === 1)   // not recomputed
-  }
-
-  test("checkpoint: a readable dir WITHOUT _SUCCESS is a torn write — recomputed, not resumed") {
-    // Simulate a crash during job commit: task part-files landed (the
-    // dir reads fine, schema and all) but the committer never wrote
-    // _SUCCESS. readOrCompute must treat that as incomplete.
-    val dir = Files.createTempDirectory("cp_torn").toString + "/stage"
-    spark.range(3).toDF("id").write.parquet(dir)   // full write…
-    assert(new java.io.File(dir, "_SUCCESS").delete())  // …then tear it
-    assert(!Checkpoint.isComplete(spark, dir))
-    var computed = 0
-    val got = Checkpoint.readOrCompute(spark, dir) {
-      computed += 1
-      spark.range(10).toDF("id")
-    }
-    assert(computed === 1 && got.count() === 10)
-    // the recompute overwrote the torn dir with a committed one
-    assert(Checkpoint.isComplete(spark, dir))
-    assert(spark.read.parquet(dir).count() === 10)
   }
 }

@@ -81,6 +81,29 @@ class CliSpec extends SparkSuite {
     assert(keyed.candidates.count() > 0)
   }
 
+  test("meertrap CLI: --checkpoint resumes only the scan that built it") {
+    val root = Files.createTempDirectory("meertrap_cli_resume")
+    Seq("2023-11-20", "2023-11-21").foreach(k =>
+      Files.move(graft.meertrap.FixtureGen.generate(), root.resolve(k)))
+    val cp = Files.createTempDirectory("meertrap_cli_cp").toString
+    def run(key: String) = graft.meertrap.Main.run(spark, graft.meertrap.Main.Args(
+      input = root.toString, partitionKey = key, checkpoint = Some(cp)))
+    def stageFiles = new java.io.File(cp, "obs_raw").list().toSet
+    val first = run("2023-11-20")
+    val built = stageFiles
+    assert(built.contains("_SUCCESS"))
+    // The next day's ingest against the same dir must not return this
+    // day's observations.
+    val e = intercept[IllegalStateException](run("2023-11-21"))
+    assert(e.getMessage.contains("DIFFERENT run"))
+    assert(stageFiles === built)
+    // The same partition again resumes: the stage is read, not rewritten.
+    val again = run("2023-11-20")
+    assert(stageFiles === built)
+    assert(again.observation.obs.count() === first.observation.obs.count())
+    assert(again.candidates.count() === first.candidates.count())
+  }
+
   test("atnf CLI: snapshot run transforms and writes parquet") {
     val csv = Files.createTempDirectory("atnf_cli").resolve("cat.csv")
     Files.writeString(csv,

@@ -20,7 +20,10 @@ class StreamingBudgetFillSpec extends SparkSuite {
         buf.synchronized { buf ++= b.collect() }; ()
       }
       .start()
-    try { q.awaitTermination(120000); buf.toSeq } finally q.stop()
+    try {
+      assert(q.awaitTermination(120000), "the stream did not terminate within 120 s")
+      buf.toSeq
+    } finally q.stop()
   }
 
   private def withRocks[T](body: => T): T = {

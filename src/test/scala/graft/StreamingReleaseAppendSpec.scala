@@ -77,7 +77,12 @@ class StreamingReleaseAppendSpec extends SparkSuite {
     // Strong references to every persisted RDD seen: only an explicit
     // unpersist can drop one, not GC-driven ContextCleaner cleanup.
     val seen = scala.collection.mutable.Map.empty[Int, org.apache.spark.rdd.RDD[_]]
-    val before = spark.sparkContext.getPersistentRDDs.size
+    // An empty build first frees whatever build ran last in this JVM (an
+    // earlier test's micro-batch), so the first batch below frees nothing
+    // counted in `before`.
+    graft.core.Frames.owned(spark)(())
+    seen ++= spark.sparkContext.getPersistentRDDs
+    val before = seen.size
     val held = (1 to 4).map { k =>
       assert(sink.processBatch(docs0.where(pmod(col("doc_id"), lit(5)) === k), k.toLong))
       val live = spark.sparkContext.getPersistentRDDs
