@@ -114,29 +114,4 @@ object AsOf {
     val df = org.apache.spark.sql.GraftSqlShim.ofRows(left.sparkSession, node)
     rightCols.foldLeft(df)((acc, c) => acc.withColumnRenamed(s"__r_$c", c))
   }
-
-  /** Range-join + keep-latest variant: simpler plan, correct for selective
-    * range predicates; prefer [[joinBackward]] when the right side is large
-    * relative to key cardinality.
-    */
-  def joinBackwardViaRangeJoin(
-      left: DataFrame,
-      right: DataFrame,
-      byKeys: Seq[String],
-      leftTs: String,
-      rightTs: String,
-      leftIdCol: String
-  ): DataFrame = {
-    val joined = left.as("l").join(
-      right.as("r"),
-      byKeys.map(k => col(s"l.$k") === col(s"r.$k")).reduce(_ && _) &&
-        col(s"l.$leftTs") >= col(s"r.$rightTs"),
-      "left"
-    )
-    val w = Window.partitionBy(col(s"l.$leftIdCol")).orderBy(col(s"r.$rightTs").desc_nulls_last)
-    joined
-      .withColumn("__rn", row_number().over(w))
-      .where(col("__rn") === 1)
-      .drop("__rn")
-  }
 }

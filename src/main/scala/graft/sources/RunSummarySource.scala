@@ -17,40 +17,44 @@ import graft.meertrap.Schemas
   *     in a quarantine frame instead of failing the job (per-file fault
   *     tolerance, `extract.py:106-113`).
   *
+  * [[parse]] is everything after the scan, so the incremental path
+  * ([[graft.streaming.IncrementalRunner.runSummaries]]) runs it on each
+  * micro-batch of streamed files: the same key, dedup and quarantine
+  * within a batch; dedup across batches is the caller's.
+  *
   * Scale: at 100 TB of small files the binaryFile listing is the bottleneck;
   * production layout would compact bundles into larger containers (or
-  * ingest via streaming `Trigger.AvailableNow`). The operator surface is
+  * ingest through the incremental path). The operator surface is
   * unchanged either way.
   */
 object RunSummarySource {
 
   final case class Result(parsed: DataFrame, corrupt: DataFrame)
 
-  /** Read every `*.json` under `dir` (recursive), dedup by content hash,
-    * parse with the declared schema.
-    *
-    * @return parsed frame (nested columns + `filename` + `md5`) and
-    *         quarantine frame of unparseable files (path + raw content).
-    */
-  def read(spark: SparkSession, dir: String): Result = {
-    val raw = spark.read.format("binaryFile")
+  /** Read every `*.json` under `dir` (recursive) and [[parse]] it. */
+  def read(spark: SparkSession, dir: String): Result =
+    parse(spark.read.format("binaryFile")
       .option("pathGlobFilter", "*.json")
       .option("recursiveFileLookup", "true")
       .load(dir)
-      .select(col("path"), col("content").cast("string").as("json"))
-      .withColumn("md5", md5(col("json")))
+      .select(col("path"), col("content").cast("string").as("json")))
 
+  /** Dedup `(path, json)` files by content hash, parse with the declared
+    * schema.
+    *
+    * @return parsed frame (`filename` + `md5` + the schema's columns) and
+    *         quarantine frame of unparseable files (path + raw content).
+    */
+  def parse(files: DataFrame): Result = {
     // Deterministic keep-first by path (reference keeps thread-arrival
     // first, which is non-deterministic; path order is stable re-run to
     // re-run and equally valid for idempotency).
-    val deduped = graft.operators.Dedup.keepFirst(raw, Seq("md5"), Seq(col("path").asc))
+    val deduped = graft.operators.Dedup.keepFirst(
+      files.withColumn("md5", md5(col("json"))), Seq("md5"), Seq(col("path").asc))
 
     val parsed = deduped
       .withColumn("rec", from_json(col("json"), Schemas.runSummary))
-      .withColumn("filename",
-        concat_ws("/",
-          regexp_extract(col("path"), "([^/]+)/[^/]+$", 1),
-          regexp_extract(col("path"), "([^/]+)\\.json$", 1)))
+      .withColumn("filename", FileKey(col("path")))
 
     Result(
       parsed = parsed.where(col("rec").isNotNull && col("rec.utc_start").isNotNull)

@@ -8,10 +8,11 @@ import graft.meertrap.Schemas
 /** SPCCL single-line TSV source (reference S3/S4,
   * `meertrap/candidate/extract.py:15-117`).
   *
-  * One distributed CSV scan with tab separator and the declared positional
-  * schema; `input_file_name()` supplies the per-file metadata the reference
-  * derives from `Path` objects:
-  *   - `filename` = `<candidate_dir>/<file stem>` (`extract.py:71-75`),
+  * The one SPCCL reader. One distributed CSV scan with tab separator and
+  * the declared positional schema (PERMISSIVE: a malformed numeric cell
+  * nulls that value, not the row); `input_file_name()` supplies the
+  * per-file metadata the reference derives from `Path` objects:
+  *   - `filename` = [[FileKey]] (`extract.py:71-75`),
   *   - plot/filterbank paths prefixed with the candidate dir
   *     (`extract.py:56-62`).
   *
@@ -35,12 +36,10 @@ object SpcclSource {
     val withCounts = raw.withColumn("__n_in_file",
       count(lit(1)).over(Window.partitionBy("__path")))
 
-    val candDir = regexp_extract(col("__path"), "([^/]+)/[^/]+$", 1)
-    // file stem: basename minus last extension (Path.stem semantics).
-    val stem = regexp_extract(col("__path"), "([^/]+?)(\\.[^/.]*)?$", 1)
+    val candDir = FileKey.candidateDir(col("__path"))
 
     val prefixed = withCounts
-      .withColumn("filename", concat_ws("/", candDir, stem))
+      .withColumn("filename", FileKey(col("__path")))
       .withColumn("fil_file",
         when(col("fil_file").isNotNull, concat_ws("/", candDir, col("fil_file")))
           .otherwise(col("fil_file")))

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import graft.meertrap.Schemas
+import graft.sources.RunSummarySource
 
 /** Incremental (streaming) ingestion mode.
   *
@@ -19,9 +19,12 @@ import graft.meertrap.Schemas
   */
 object IncrementalRunner {
 
-  /** Incremental run-summary ingestion: each micro-batch receives newly
-    * arrived parsed run summaries; `onBatch` typically runs
-    * [[graft.meertrap.ObservationTransform.transform]] + the sink.
+  /** Incremental run-summary ingestion: each micro-batch of newly arrived
+    * `*.json` files is parsed by [[RunSummarySource.parse]], the batch
+    * source's own parse, so `onBatch` receives the batch schema (parsed
+    * frame for [[graft.meertrap.ObservationTransform.flatten]]) and the
+    * batch quarantine. Duplicates collapse within a micro-batch; across
+    * batches, content dedup is the caller's (e.g. a silver step).
     *
     * `cleanSource`/archiving and `maxFilesPerTrigger` tuning are the 100 TB
     * knobs; `Trigger.AvailableNow` drains the backlog then stops (the
@@ -31,7 +34,7 @@ object IncrementalRunner {
       spark: SparkSession,
       dir: String,
       checkpoint: String,
-      onBatch: (DataFrame, Long) => Unit,
+      onBatch: (RunSummarySource.Result, Long) => Unit,
       maxFilesPerTrigger: Int = 0
   ): StreamingQuery = {
     val reader = spark.readStream
@@ -44,25 +47,13 @@ object IncrementalRunner {
       if (maxFilesPerTrigger > 0)
         reader.option("maxFilesPerTrigger", maxFilesPerTrigger)
       else reader
-    // Same parsed schema as the batch source (filename, md5, fields) so a
-    // micro-batch feeds ObservationTransform.flatten unchanged — the
-    // incremental and batch paths share one transform.
-    val stream = sized.text(dir)
-      .select(
-        from_json(col("value"), Schemas.runSummary).as("rec"),
-        md5(col("value")).as("md5"),
-        col("_metadata.file_path").as("path"))
-      .where(col("rec").isNotNull && col("rec.utc_start").isNotNull)
-      .withColumn("filename",
-        concat_ws("/",
-          regexp_extract(col("path"), "([^/]+)/[^/]+$", 1),
-          regexp_extract(col("path"), "([^/]+)\\.json$", 1)))
-      .select(col("filename"), col("md5"), col("rec.*"))
 
-    stream.writeStream
+    sized.text(dir)
+      .select(col("_metadata.file_path").as("path"), col("value").as("json"))
+      .writeStream
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) => onBatch(batch, id) }
+      .foreachBatch { (files: DataFrame, id: Long) => onBatch(RunSummarySource.parse(files), id) }
       .start()
   }
 

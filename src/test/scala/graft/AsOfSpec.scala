@@ -31,14 +31,6 @@ class AsOfSpec extends SparkSuite {
       4L -> Some(200L), 5L -> None))
   }
 
-  test("range-join variant agrees with union-and-fill") {
-    val a = AsOf.joinBackward(left, right, Seq("k"), "lts", "rts", Seq("rid"))
-      .select($"id", $"rid").collect().map(r => r.getLong(0) -> Option(r.get(1))).toMap
-    val b = AsOf.joinBackwardViaRangeJoin(left, right, Seq("k"), "lts", "rts", "id")
-      .select($"id", $"rid").collect().map(r => r.getLong(0) -> Option(r.get(1))).toMap
-    assert(a === b)
-  }
-
   test("native sort-merge exec agrees with union-and-fill") {
     val a = AsOf.joinBackward(left, right, Seq("k"), "lts", "rts", Seq("rid"))
       .select($"id", $"rid").collect().map(r => r.getLong(0) -> Option(r.get(1))).toMap

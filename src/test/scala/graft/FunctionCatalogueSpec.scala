@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 import org.apache.logging.log4j.LogManager
 import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
@@ -127,11 +125,9 @@ class FunctionCatalogueSpec extends SparkSuite {
   }
 
   test("source guard: call_function names are declared and only the catalogue registers") {
-    val root = Paths.get("src/main/scala")
-    val files = Files.walk(root).iterator.asScala
-      .filter(_.toString.endsWith(".scala")).toSeq
+    val root = MainSources.root
+    val files = MainSources.files
     assert(files.size > 100, s"scanned ${files.size} files under $root")
-    def read(f: Path) = new String(Files.readAllBytes(f), UTF_8)
 
     // A Column API whose name is missing would otherwise fail only at
     // analysis time, in whichever query first uses it. Spark's own
@@ -140,7 +136,7 @@ class FunctionCatalogueSpec extends SparkSuite {
     val call = """call_function\(\s*"([^"]+)"""".r
     val undeclared = for {
       f <- files
-      m <- call.findAllMatchIn(read(f))
+      m <- call.findAllMatchIn(MainSources.read(f))
       n = m.group(1)
       if !declared(n) && !FunctionRegistry.builtin.functionExists(FunctionIdentifier(n))
     } yield s"$f: $n"
@@ -148,7 +144,7 @@ class FunctionCatalogueSpec extends SparkSuite {
 
     val home = root.resolve("graft/GraftExtensions.scala")
     val registers = "createOrReplaceTempFunction|injectFunction|registerFunction".r
-    val outside = files.filter(f => f != home && registers.findFirstIn(read(f)).isDefined)
+    val outside = MainSources.matchesOutside(registers)(_ == home)
     assert(outside.isEmpty, outside.mkString("\n"))
   }
 }

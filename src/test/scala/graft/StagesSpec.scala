@@ -1,8 +1,6 @@
 package graft
 
-import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, Path, Paths}
-import scala.jdk.CollectionConverters._
+import java.nio.file.Files
 import graft.core.Stages
 
 /** [[graft.core.Stages]] is the one place a stage boundary is decided:
@@ -11,18 +9,13 @@ import graft.core.Stages
 class StagesSpec extends SparkSuite {
 
   test("source guard: eager cuts and durable stages go through core/Stages.scala only") {
-    val root = Paths.get("src/main/scala")
-    val files = Files.walk(root).iterator.asScala
-      .filter(_.toString.endsWith(".scala")).toSeq
+    val root = MainSources.root
+    val files = MainSources.files
     assert(files.size > 100, s"scanned ${files.size} files under $root")
     val home = root.resolve("graft/core/Stages.scala")
     assert(files.contains(home))
-    def read(f: Path) = new String(Files.readAllBytes(f), UTF_8)
     val boundary = """\.localCheckpoint\(|readOrCompute|_manifest\.json""".r
-    val outside = for {
-      f <- files if f != home
-      m <- boundary.findAllMatchIn(read(f))
-    } yield s"$f: ${m.matched}"
+    val outside = MainSources.matchesOutside(boundary)(_ == home)
     assert(outside.isEmpty, outside.mkString("\n"))
   }
 

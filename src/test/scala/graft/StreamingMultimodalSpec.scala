@@ -11,13 +11,17 @@ class StreamingMultimodalSpec extends SparkSuite {
   test("incremental run-summary ingestion drains the directory with AvailableNow") {
     val root = graft.meertrap.FixtureGen.generate()
     val cp   = Files.createTempDirectory("graft_stream_cp").toString
-    var total = 0L
+    var batches = 0
+    var parsed = 0L
+    var corrupt = 0L
     val q = IncrementalRunner.runSummaries(spark, root.toString, cp,
-      (batch, _) => total += batch.count())
+      (r, _) => { batches += 1; parsed += r.parsed.count(); corrupt += r.corrupt.count() })
     q.awaitTermination(120000)
-    // 6 json files, 1 corrupt -> 5 parsed rows (content dedup is a batch
-    // concern; the stream dedups at transform time like the reference re-runs)
-    assert(total === 5)
+    // 6 json files in one micro-batch, parsed like the batch source: every
+    // file accounted for (4 parsed, 1 duplicate collapsed, 1 quarantined)
+    assert(batches === 1)
+    assert(parsed === 4)
+    assert(corrupt === 1)
   }
 
   test("windowed event aggregation (batch-mode check of the streaming plan)") {

@@ -6,11 +6,12 @@ import graft.SparkSuite
 import graft.streaming.IncrementalRunner
 
 /** Incremental end-to-end: the reference's Dagster daily-partition story
-  * re-expressed as bronze/silver — micro-batches of parsed run summaries
-  * append to a bronze table (content dedup at read time like the batch
-  * source is deferred to the silver step, since dups can span batches);
-  * the SAME `ObservationTransform` then runs over accumulated bronze and
-  * must produce exactly the batch pipeline's entities.
+  * re-expressed as bronze/silver — micro-batches of run summaries, parsed
+  * and quarantined by the batch source's own parse, append to a bronze
+  * table (content dedup across batches is the silver step's, since dups
+  * can span batches); the SAME `ObservationTransform` then runs over
+  * accumulated bronze and must produce exactly the batch pipeline's
+  * entities.
   */
 class IncrementalPipelineSpec extends SparkSuite {
 
@@ -20,8 +21,13 @@ class IncrementalPipelineSpec extends SparkSuite {
     val bronze = Files.createTempDirectory("inc_bronze").toString + "/runs"
 
     var batches = 0
+    var corrupt = 0L
     val q = IncrementalRunner.runSummaries(spark, root, cp,
-      (b, _) => { batches += 1; b.write.mode("append").parquet(bronze) },
+      (r, _) => {
+        batches += 1
+        r.parsed.write.mode("append").parquet(bronze)
+        corrupt += r.corrupt.count()
+      },
       maxFilesPerTrigger = 2)
     q.awaitTermination(120000)
     assert(batches > 1, "maxFilesPerTrigger=2 must split the fixture into several micro-batches")
@@ -32,7 +38,10 @@ class IncrementalPipelineSpec extends SparkSuite {
       spark.read.parquet(bronze), Seq("md5"), Seq(col("filename").asc))
     val inc = ObservationTransform.transform(ObservationTransform.flatten(accumulated))
 
-    val direct = MeertrapPipeline.run(spark, root).observation
+    val batch = MeertrapPipeline.run(spark, root)
+    val direct = batch.observation
+    // every corrupt file is quarantined in some micro-batch, as in batch
+    assert(corrupt === batch.corruptRunSummaries.count())
 
     def key(df: org.apache.spark.sql.DataFrame): Set[String] =
       df.collect().map(_.mkString("|")).toSet

@@ -3,6 +3,7 @@ package graft.meertrap
 import org.apache.spark.sql.functions._
 import graft.SparkSuite
 import graft.load.Targets
+import graft.sources.SpcclSource
 
 /** End-to-end pipeline over the generated reference-shaped fixture tree
   * (SURVEY.md §5.2 golden tests + the reference's own runtime invariants).
@@ -89,6 +90,24 @@ class MeertrapPipelineSpec extends SparkSuite {
   test("2-line SPCCL file quarantined per-file (S3 invariant)") {
     assert(out.quarantinedSpccl.count() === 1)
     assert(out.quarantinedSpccl.head().getLong(1) === 2L)
+  }
+
+  test("malformed numeric cells null the VALUE; CRLF files parse cleanly") {
+    import java.nio.file.{Files, Paths}
+    val r = FixtureGen.generate().toString
+    // dm (pos 2) unparseable; snr (pos 4) fine; CRLF line endings, whose \r
+    // must not corrupt the last cell (plot_file).
+    val dir = Paths.get(r, "tpn-bad-1_1700000001")
+    Files.createDirectories(dir)
+    Files.writeString(dir.resolve("7777_spccl.log"),
+      "1\t60000.5\tNOT_A_NUMBER\t4.25\t12.5\t7\tC\t04:37:15.99\t-47:15:09.7\t1\t0.9\tf.fil\tp.jpg\r\n")
+    val row = SpcclSource.read(spark, r).parsed
+      .where(col("filename").contains("7777"))
+      .select("dm", "snr", "plot_file").collect()
+    assert(row.length === 1)                       // scan survived the cell
+    assert(row(0).isNullAt(0))                     // dm -> null
+    assert(row(0).getDouble(1) === 12.5)           // snr intact
+    assert(row(0).getString(2).endsWith("p.jpg"))  // no trailing \r
   }
 
   test("candidates: as-of beam attach + keep-first dedup (J9/A1)") {
