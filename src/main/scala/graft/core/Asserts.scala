@@ -11,15 +11,6 @@ final class UnexpectedShapeException(msg: String) extends RuntimeException(msg)
 
 object Asserts {
 
-  /** Fail if any row has a null in `c` — the post-join FK check. Uses
-    * limit(1) so the scan short-circuits instead of counting everything.
-    */
-  def noNulls(df: DataFrame, c: String, context: String): DataFrame = {
-    if (df.where(col(c).isNull).limit(1).count() > 0)
-      throw new UnexpectedShapeException(s"$context: unexpected null in $c")
-    df
-  }
-
   /** Fail if any of `cols` has a null — ALL columns checked in ONE
     * aggregate job (one job per column scans the frame N times).
     */
@@ -32,14 +23,6 @@ object Asserts {
           throw new UnexpectedShapeException(s"$context: unexpected null in $c0")
       }
     }
-    df
-  }
-
-  /** Fail unless the frame has exactly `expected` rows. */
-  def rowCount(df: DataFrame, expected: Long, context: String): DataFrame = {
-    val n = df.count()
-    if (n != expected)
-      throw new UnexpectedShapeException(s"$context: expected $expected rows, got $n")
     df
   }
 }

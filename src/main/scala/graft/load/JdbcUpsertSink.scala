@@ -57,10 +57,12 @@ object PostgresDialect extends SinkDialect {
       s"SELECT $cols FROM ${t.table}__stage " +
       s"ON CONFLICT ($conflict) DO NOTHING"
   }
+  /** Stage-table DDL (mirrors the target minus identity columns). */
+  def stageSql(t: TargetInfo): String =
+    s"CREATE TABLE IF NOT EXISTS ${t.table}__stage " +
+      s"(LIKE ${t.table} INCLUDING DEFAULTS EXCLUDING IDENTITY)"
   override def createStage(conn: java.sql.Connection, t: TargetInfo): Unit =
-    conn.createStatement().execute(
-      s"CREATE TABLE IF NOT EXISTS ${t.table}__stage " +
-        s"(LIKE ${t.table} INCLUDING DEFAULTS EXCLUDING IDENTITY)")
+    conn.createStatement().execute(stageSql(t))
   override def truncateSql(t: TargetInfo): String = s"TRUNCATE ${t.table}__stage"
 }
 
@@ -86,27 +88,11 @@ object DerbyDialect extends SinkDialect {
 
 object JdbcUpsertSink {
 
-  /** Server-side merge statement for step 2 (production dialect). */
-  def mergeSql(t: TargetInfo, columns: Seq[String]): String =
-    PostgresDialect.mergeSql(t, columns)
-
   /** Key-map query for step 3: natural key columns + generated id. */
   def keyMapSql(t: TargetInfo): String = {
     val nk = t.uniqueConstraint.mkString(", ")
     s"SELECT $nk, ${t.primaryKey} FROM ${t.table}"
   }
-
-  /** Stage-table DDL (mirrors the target minus identity columns). */
-  def stageSql(t: TargetInfo): String =
-    s"CREATE TABLE IF NOT EXISTS ${t.table}__stage " +
-      s"(LIKE ${t.table} INCLUDING DEFAULTS EXCLUDING IDENTITY)"
-
-  /** Remap a child frame's FK column from run-local ids to DB ids using a
-    * (localId -> dbId) key-map frame — reference F16
-    * (`core/database_loader.py:182-189`), as a broadcast join.
-    */
-  def remapForeignKey(child: DataFrame, fkCol: String, keyMap: DataFrame): DataFrame =
-    KeyMap.remap(child, fkCol, keyMap, "local_id", "db_id")
 
   /** Execute the full ordered load over JDBC. Driver-side coordination,
     * executor-side data movement.
@@ -154,10 +140,12 @@ object JdbcUpsertSink {
       conn: java.sql.Connection, dialect: SinkDialect,
       t: TargetInfo, view0: DataFrame,
       keyMaps: Map[String, DataFrame]): DataFrame = {
-    // FK propagation: remap any FK whose parent already loaded.
+    // FK propagation: remap any FK whose parent already loaded, from
+    // run-local ids to DB ids — reference F16
+    // (`core/database_loader.py:182-189`), as a broadcast join.
     val view = t.foreignKeys.foldLeft(view0) { (acc, fk) =>
       keyMaps.get(fk.stripSuffix("_id")) match {
-        case Some(km) => remapForeignKey(acc, fk, km)
+        case Some(km) => KeyMap.remap(acc, fk, km, "local_id", "db_id")
         case None     => acc
       }
     }

@@ -3,7 +3,7 @@ package graft.meertrap
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Stages
-import graft.sources.{RunSummarySource, SpcclSource}
+import graft.sources.MeertrapFiles
 
 /** End-to-end MeerTRAP batch pipeline (reference `meertrap/main.py:6-10` +
   * `meertrap/meertrap.py:70-205`): parse -> transform -> (load).
@@ -25,8 +25,7 @@ object MeertrapPipeline {
   def run(spark: SparkSession, dir: String,
           checkpointDir: Option[String] = None,
           fileRoot: String = "data", partitionKey: String = ""): Output = {
-    val runSummaries = RunSummarySource.read(spark, dir)
-    val spccl        = SpcclSource.read(spark, dir)
+    val files = MeertrapFiles.read(spark, dir)
 
     // The parse is fused ([[graft.core.Stages]]): without a checkpoint
     // dir it is not materialized on its own. The transform's cuts read it
@@ -34,7 +33,7 @@ object MeertrapPipeline {
     // assertion) re-reads it. With a dir it is durable, and the manifest
     // refuses to resume it for a different scan.
     val stages = Stages(spark, checkpointDir)(manifest(spark, dir, fileRoot, partitionKey))
-    val flat = stages.fused("obs_raw", ObservationTransform.flatten(runSummaries.parsed))
+    val flat = stages.fused("obs_raw", ObservationTransform.flatten(files.runSummaries.parsed))
 
     val obsResult = ObservationTransform.transform(flat)
 
@@ -45,9 +44,9 @@ object MeertrapPipeline {
       Seq("observation_id"))
 
     val cands = CandidateTransform.transform(
-      spccl.parsed, obsBeams, fileRoot, partitionKey)
+      files.spccl.parsed, obsBeams, fileRoot, partitionKey)
 
-    Output(obsResult, cands, runSummaries.corrupt, spccl.quarantined)
+    Output(obsResult, cands, files.runSummaries.corrupt, files.spccl.quarantined)
   }
 
   /** What a checkpoint dir's stages were built from: the scan dir

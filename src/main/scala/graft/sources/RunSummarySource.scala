@@ -8,8 +8,9 @@ import graft.meertrap.Schemas
   * `meertrap/observation/extract.py:22-128`).
   *
   * Spark-first redesign of the reference's thread-pooled per-file loop:
-  *   - one distributed `binaryFile` scan of the candidate-directory tree
-  *     (recursive glob, like `rglob("*.json")`),
+  *   - the `*.json` files of a distributed `binaryFile` scan of the
+  *     candidate-directory tree ([[MeertrapFiles]], recursive like
+  *     `rglob("*.json")`),
   *   - content-hash dedup BEFORE parsing (the reference MD5s each file and
   *     skips seen hashes, `extract.py:60-77`) — here `md5(content)` +
   *     deterministic keep-first-by-path instead of thread-arrival order,
@@ -21,11 +22,6 @@ import graft.meertrap.Schemas
   * ([[graft.streaming.IncrementalRunner.runSummaries]]) runs it on each
   * micro-batch of streamed files: the same key, dedup and quarantine
   * within a batch; dedup across batches is the caller's.
-  *
-  * Scale: at 100 TB of small files the binaryFile listing is the bottleneck;
-  * production layout would compact bundles into larger containers (or
-  * ingest through the incremental path). The operator surface is
-  * unchanged either way.
   */
 object RunSummarySource {
 
@@ -33,11 +29,7 @@ object RunSummarySource {
 
   /** Read every `*.json` under `dir` (recursive) and [[parse]] it. */
   def read(spark: SparkSession, dir: String): Result =
-    parse(spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.json")
-      .option("recursiveFileLookup", "true")
-      .load(dir)
-      .select(col("path"), col("content").cast("string").as("json")))
+    parse(MeertrapFiles.runSummaries(MeertrapFiles.scan(spark, dir, "*.json")))
 
   /** Dedup `(path, json)` files by content hash, parse with the declared
     * schema.

@@ -11,7 +11,7 @@ class JdbcUpsertSinkSpec extends AnyFunSuite {
   private val obs = Targets.meertrap.find(_.table == "observation").get
 
   test("merge statement upserts from stage with conflict-skip") {
-    val sql = JdbcUpsertSink.mergeSql(obs, Seq("t_min", "t_max", "schedule_block_id"))
+    val sql = PostgresDialect.mergeSql(obs, Seq("t_min", "t_max", "schedule_block_id"))
     assert(sql ===
       "INSERT INTO observation (t_min, t_max, schedule_block_id) " +
         "SELECT t_min, t_max, schedule_block_id FROM observation__stage " +
@@ -23,7 +23,7 @@ class JdbcUpsertSinkSpec extends AnyFunSuite {
   }
 
   test("stage DDL clones the target without identity columns") {
-    assert(JdbcUpsertSink.stageSql(obs) ===
+    assert(PostgresDialect.stageSql(obs) ===
       "CREATE TABLE IF NOT EXISTS observation__stage " +
         "(LIKE observation INCLUDING DEFAULTS EXCLUDING IDENTITY)")
   }

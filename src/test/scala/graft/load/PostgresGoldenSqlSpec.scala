@@ -98,7 +98,7 @@ class PostgresGoldenSqlSpec extends AnyFunSuite {
 
   test("stage DDL and truncate are the Postgres forms") {
     val cand = Targets.meertrap.find(_.table == "candidate").get
-    assert(JdbcUpsertSink.stageSql(cand) ===
+    assert(PostgresDialect.stageSql(cand) ===
       "CREATE TABLE IF NOT EXISTS candidate__stage " +
         "(LIKE candidate INCLUDING DEFAULTS EXCLUDING IDENTITY)")
     assert(PostgresDialect.truncateSql(cand) === "TRUNCATE candidate__stage")

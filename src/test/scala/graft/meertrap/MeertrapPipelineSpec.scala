@@ -3,7 +3,7 @@ package graft.meertrap
 import org.apache.spark.sql.functions._
 import graft.SparkSuite
 import graft.load.Targets
-import graft.sources.SpcclSource
+import graft.sources.MeertrapFiles
 
 /** End-to-end pipeline over the generated reference-shaped fixture tree
   * (SURVEY.md §5.2 golden tests + the reference's own runtime invariants).
@@ -95,19 +95,78 @@ class MeertrapPipelineSpec extends SparkSuite {
   test("malformed numeric cells null the VALUE; CRLF files parse cleanly") {
     import java.nio.file.{Files, Paths}
     val r = FixtureGen.generate().toString
+    def write(dir: String, name: String, text: String): Unit = {
+      val d = Paths.get(r, dir)
+      Files.createDirectories(d)
+      Files.writeString(d.resolve(name), text)
+    }
+    val rec = "1\t60000.5\t100.0\t4.25\t12.5\t7\tC\t04:37:15.99\t-47:15:09.7\t1\t0.9\tf.fil\tp.jpg"
     // dm (pos 2) unparseable; snr (pos 4) fine; CRLF line endings, whose \r
     // must not corrupt the last cell (plot_file).
-    val dir = Paths.get(r, "tpn-bad-1_1700000001")
-    Files.createDirectories(dir)
-    Files.writeString(dir.resolve("7777_spccl.log"),
+    write("tpn-bad-1_1700000001", "7777_spccl.log",
       "1\t60000.5\tNOT_A_NUMBER\t4.25\t12.5\t7\tC\t04:37:15.99\t-47:15:09.7\t1\t0.9\tf.fil\tp.jpg\r\n")
-    val row = SpcclSource.read(spark, r).parsed
+    // Line breaks as a text-file CSV scan reads them: CR alone ends a line;
+    // empty and whitespace-only lines are not records.
+    write("tpn-cr-1_1700000002", "8888_spccl.log", rec + "\r" + rec + "\r")
+    write("tpn-blank-1_1700000003", "9999_spccl.log", rec + "\n\n \t\n")
+    write("tpn-none-1_1700000004", "6666_spccl.log", "\n \t\n")
+    val files = MeertrapFiles.read(spark, r)
+    val row = files.spccl.parsed
       .where(col("filename").contains("7777"))
       .select("dm", "snr", "plot_file").collect()
     assert(row.length === 1)                       // scan survived the cell
     assert(row(0).isNullAt(0))                     // dm -> null
     assert(row(0).getDouble(1) === 12.5)           // snr intact
     assert(row(0).getString(2).endsWith("p.jpg"))  // no trailing \r
+    val quarantined = files.spccl.quarantined
+    val cr = quarantined.where(col("path").contains("8888")).collect()
+    assert(cr.map(_.getLong(1)).toSeq === Seq(2L))
+    assert(files.spccl.parsed.where(col("filename").contains("8888")).count() === 0)
+    val blank = files.spccl.parsed.where(col("filename").contains("9999"))
+      .select("snr", "plot_file").collect()
+    assert(blank.length === 1)
+    assert(blank(0).getDouble(0) === 12.5)
+    assert(blank(0).getString(1) === "tpn-blank-1_1700000003/p.jpg")
+    assert(quarantined.where(col("path").contains("9999")).count() === 0)
+    // A file with no record yields no row, as an empty file does.
+    assert(files.spccl.parsed.where(col("filename").contains("6666")).count() === 0)
+    assert(quarantined.where(col("path").contains("6666")).count() === 0)
+    // Both quarantine frames spell a file's path the same way.
+    val corrupt = files.runSummaries.corrupt.head().getString(0)
+    Seq(cr(0).getString(0), corrupt).foreach(p => assert(p.startsWith(s"file:$r/"), p))
+  }
+
+  test("one scan per partition: both formats split one listing, and no SPCCL plan shuffles") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.execution.window.WindowExec
+    val plans = new AdaptiveSparkPlanHelper {}
+    // One listing: the run-summary and SPCCL frames read one file index.
+    def locations(df: DataFrame) = df.queryExecution.analyzed
+      .collect { case l: LogicalRelation => l.relation }
+      .collect { case r: HadoopFsRelation => r.location }
+    val rs = locations(out.corruptRunSummaries)
+    val sp = locations(out.quarantinedSpccl)
+    assert(rs.size === 1 && sp.size === 1)
+    assert(rs.head eq sp.head, "the two formats list the partition twice")
+    // Counting a file's lines needs no window and no shuffle.
+    Seq(out.quarantinedSpccl, MeertrapFiles.read(spark, root.toString).spccl.parsed)
+      .foreach { df =>
+        val plan = df.queryExecution.executedPlan
+        assert(plans.find(plan) {
+          case _: WindowExec | _: Exchange => true
+          case _                           => false
+        }.isEmpty, plan.treeString)
+      }
+    // The split prunes the listing: the plan `count()` runs over the run
+    // summaries reads the fixture's 6 JSON files and no SPCCL file.
+    val counted = out.corruptRunSummaries.groupBy().count()
+    assert(counted.collect().head.getLong(0) === 1L)
+    val scans = plans.collect(counted.queryExecution.executedPlan) { case s: FileSourceScanExec => s }
+    assert(scans.map(_.metrics("numFiles").value) === Seq(6L))
   }
 
   test("candidates: as-of beam attach + keep-first dedup (J9/A1)") {
