@@ -1,10 +1,10 @@
 package graft.atnf
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.Coordinates
 import graft.meertrap.Schemas
+import graft.operators.Ids
 
 /** ATNF known-pulsar catalogue pipeline (reference `atnf/atnf.py:17-94`).
   *
@@ -43,16 +43,10 @@ object AtnfTransform {
     val unknown = params.filterNot(allParams.contains)
     require(unknown.isEmpty, s"unknown ATNF query params: ${unknown.mkString(", ")}")
     val raw = spark.read.option("header", "true").schema(Schemas.atnf).csv(csvPath)
-    // Global window — BOUNDED BY CONSTRUCTION: the ATNF catalogue is
-    // ~3.5k known pulsars (a reference dataset, not a fact stream).
-    // Fact-table paths must use Ids.denseId; do not copy this pattern.
-    val w = Window.orderBy(c("known_ps.name"))
     val selected = queryParamMapping
       .filter { case (p, _) => p == "NAME" || params.contains(p) }
       .map { case (p, out) => col(p).as(out) }
-    raw
-      .select(selected: _*)
-      .withColumn("known_pulsar_id", row_number().over(w).cast("long"))
+    Ids.denseId(raw.select(selected: _*), "known_pulsar_id", Seq(c("known_ps.name")))
       .withColumn("visit.visited_at", lit(visitedAt))
   }
 

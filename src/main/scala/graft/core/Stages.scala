@@ -13,8 +13,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    every consumer re-runs the whole upstream cascade. (2) Lineage
   *    truncation: a persist (or `.cache()`) alone leaves each stage's
   *    plan EMBEDDED in the next one's, and stages that reference their
-  *    input twice (a join against a drop-set derived from that input,
-  *    `sbDf`/`Ids.denseId` in MeerTRAP) DOUBLE the plan tree per stage.
+  *    input twice (`ObservationTransform.transform` joins frames derived
+  *    from `flatIn` back together) DOUBLE the plan tree per stage.
   *    The driver then spends its time stringifying and re-analyzing
   *    exponential plans, not executing them. A cut turns the subtree into
   *    a LogicalRDD leaf, so plans stay O(stage) for the analyzer and the

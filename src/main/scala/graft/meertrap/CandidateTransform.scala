@@ -39,11 +39,8 @@ object CandidateTransform {
     * observed_at from MJD, coordinates to degrees, "(ra,dec)" position.
     */
   def enrich(cand: DataFrame): DataFrame = {
-    // Candidates are the fact table (millions of rows at scale): ids are
-    // minted with the distributed dense-rank operator, not a global window
-    // (SURVEY W2 — the loader remaps ids, only run-local uniqueness and a
-    // deterministic order matter). Filenames are unique per candidate row
-    // (SPCCL files are single-line; multi-line files are quarantined).
+    // Filenames are unique per candidate row (SPCCL files are single-line;
+    // multi-line files are quarantined), so the ids are deterministic.
     Ids.denseId(cand, "candidate_id", Seq(col("filename")))
       .withColumn("cand.coherent", c("cand.beam_mode") === "C")
       .withColumn("cand.observed_at", TimeFns.mjdToTimestamp(c("cand.mjd")))

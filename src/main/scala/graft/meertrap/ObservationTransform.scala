@@ -74,9 +74,7 @@ object ObservationTransform {
       lit(0.0d), (acc, v) => acc + v).cast("long")
 
   /** Unique schedule blocks with surrogate ids + estimated end
-    * (`transform.py:108-177`). Window ids are single-partition but the SB
-    * frame is already deduped to one row per schedule block (tiny by
-    * construction — thousands, not billions).
+    * (`transform.py:108-177`).
     */
   def sbDf(flat: DataFrame): DataFrame = {
     val uniq = Dedup.keepFirst(flat, Seq("mk_sb.meerkat_id"),
@@ -88,16 +86,11 @@ object ObservationTransform {
     val fixed = sel.withColumn("sb.expected_duration_seconds",
       when(c("sb.expected_duration_seconds") === 0, scriptDurationSum)
         .otherwise(c("sb.expected_duration_seconds")))
-    // Global (unpartitioned) window — BOUNDED BY CONSTRUCTION: schedule
-    // blocks are deduped on meerkat_id, one row per observing session
-    // (thousands, not billions, at any archive scale). Fact-table paths
-    // must use Ids.denseId instead; do not copy this pattern.
-    val w = Window.orderBy(c("sb.start_at"), c("mk_sb.meerkat_id"))
-    fixed
+    val withEnd = fixed
       .withColumn("sb.est_end_at",
         TimeFns.plusSeconds(c("sb.start_at"), c("sb.expected_duration_seconds").cast("double")))
       .drop("sb.expected_duration_seconds", "sb.script_profile_config", "sb.targets")
-      .withColumn("schedule_block_id", row_number().over(w).cast("long"))
+    Ids.denseId(withEnd, "schedule_block_id", Seq(c("sb.start_at"), c("mk_sb.meerkat_id")))
       .withColumn("meerkat_schedule_block_id", c("schedule_block_id"))
   }
 
@@ -107,12 +100,8 @@ object ObservationTransform {
   def cbConfigDf(obsUniq: DataFrame): DataFrame = {
     val keys = Seq("cb.angle", "cb.fraction_overlap", "cb.x", "cb.y")
     val sel  = obsUniq.select((("obs.t_min" +: keys).map(c)): _*)
-    // Global window — BOUNDED BY CONSTRUCTION: beam-config rows are
-    // DISTINCT tuning tuples (a handful per telescope configuration).
-    // Fact-table paths must use Ids.denseId; do not copy this pattern.
-    val w    = Window.orderBy(keys.map(c): _*)
-    val uniqCfg = sel.drop("obs.t_min").dropDuplicates(keys)
-      .withColumn("coherent_beam_config_id", row_number().over(w).cast("long"))
+    val uniqCfg = Ids.denseId(sel.drop("obs.t_min").dropDuplicates(keys),
+      "coherent_beam_config_id", keys.map(c))
     sel.join(uniqCfg, keys, "left")
   }
 
@@ -186,14 +175,14 @@ object ObservationTransform {
       split_part(col("t.target"), lit(","), lit(1)).as("tiling.target"),
       Coordinates.hmsToDeg(split_part(col("t.target"), lit(","), lit(3))).as("tiling.ra"),
       Coordinates.dmsToDeg(split_part(col("t.target"), lit(","), lit(4))).as("tiling.dec"))
-    // Tilings grow with observations × tiles — distributed id minting, not
-    // a global window (VERDICT r2 finding #1).
+    // The order key is tiling_config's unique key (epoch, method, nbeams;
+    // `load.Targets`) within an observation, so ids follow it exactly.
     Ids.denseId(
       split
         .withColumn("obs.s_ra", c("tiling.ra"))
         .withColumn("obs.s_dec", c("tiling.dec")),
       "tiling_config_id",
-      Seq(c("observation_id"), c("tiling.epoch"), c("tiling.nbeams")))
+      Seq(c("observation_id"), c("tiling.epoch"), c("tiling.method"), c("tiling.nbeams")))
   }
 
   /** Beams: hostname from filename, host-beam array exploded/unnested,
@@ -219,8 +208,7 @@ object ObservationTransform {
       "host.port", "beam.ra", "beam.relnum", "beam.source", "observation_id")
     val uniq = Dedup.keepFirst(exploded, dupKeys, Seq(col("filename").asc))
       .drop("filename", "beam.relnum", "beam.source")
-    // Beams scale as observations × ≤780 — distributed id minting (the
-    // dedup keys make the order unique per row).
+    // The dedup keys make the order unique per row.
     Ids.denseId(uniq, "beam_id",
       Seq(c("observation_id"), c("beam.number"), c("beam.coherent"),
         c("host.ip_address"), c("host.port")))
@@ -229,12 +217,7 @@ object ObservationTransform {
   /** Unique hosts (`transform.py:519-527`). */
   def hostDf(beams: DataFrame): DataFrame = {
     val keys = Seq("host.ip_address", "host.hostname", "host.port")
-    // Global window — BOUNDED BY CONSTRUCTION: hosts are the distinct
-    // physical machines of the cluster (hundreds at most). Fact-table
-    // paths must use Ids.denseId; do not copy this pattern.
-    val w = Window.orderBy(keys.map(c): _*)
-    beams.select(keys.map(c): _*).dropDuplicates(keys)
-      .withColumn("host_id", row_number().over(w).cast("long"))
+    Ids.denseId(beams.select(keys.map(c): _*).dropDuplicates(keys), "host_id", keys.map(c))
   }
 
   final case class Result(
@@ -255,8 +238,8 @@ object ObservationTransform {
   def transform(flatIn: DataFrame): Result = {
     // The MeerTRAP stage boundaries (sb, obsUniq, obs, beams here; the
     // as-of join in CandidateTransform.attachBeamIds) are eager cuts, not
-    // `.cache()`: sbDf, cbConfigDf, Ids.denseId and the joins below
-    // reference their input twice. See [[graft.core.Stages]].
+    // `.cache()`: the joins below reference their input twice. See
+    // [[graft.core.Stages]].
     val sb = Stages.cut(sbDf(flatIn))
 
     val base = flatIn.select(

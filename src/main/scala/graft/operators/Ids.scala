@@ -1,33 +1,19 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.types.LongType
 
-/** Scalable surrogate-id minting (W2, reference
+/** Surrogate-id minting (W2, reference `with_row_index(offset=1)` in
   * `candidate/transform.py:165-197`, `observation/transform.py:108-177`).
   *
-  * The naive form — `row_number().over(Window.orderBy(k))` — funnels the
-  * whole frame through ONE partition to produce a global rank. Fine for
-  * frames that are small by construction (schedule blocks, hosts, distinct
-  * configs); a scale-killer on a fact table (candidates at 100 TB).
-  *
-  * [[denseId]] produces the SAME values (dense, contiguous, 1-based, ordered
-  * by the caller's sort key) with distributed work only:
-  *
-  *   1. range-repartition by the order key (a parallel range shuffle — the
-  *      same mechanics as a distributed sort),
-  *   2. sort within partitions and take `monotonically_increasing_id()`,
-  *      whose layout is `partitionId << 33 | localRank` — giving every row
-  *      its partition and partition-local rank with NO window,
-  *   3. count rows per partition (a tiny `numPartitions`-row aggregate),
-  *      prefix-sum those counts on the driver-sized frame, and broadcast the
-  *      offsets back: `id = offset(partition) + localRank + 1`.
-  *
-  * One real shuffle (the range partition), one small aggregate job, one
-  * broadcast hash join — no single-partition exchange anywhere. Determinism
-  * requires the order key to be unique per row (same contract as the global
-  * window it replaces; ties there were nondeterministic too).
+  * [[denseId]] is the one way an entity id is minted: dense, contiguous,
+  * 1-based, ordered by the caller's sort key. It sorts the frame once
+  * (a parallel range shuffle, never a single-partition window) and numbers
+  * that one sorted RDD with `zipWithIndex`, which counts the rows of each
+  * of its own partitions and numbers each partition from the running
+  * total. Counts and numbered rows come from the same shuffle output, so
+  * they cannot disagree: only `numPartitions` counts are collected, and there
+  * is no window, broadcast or id bit layout.
   *
   * The reference's loader remaps run-local ids to DB ids anyway
   * (`core/database_loader.py:182-189`), so contiguity is a convenience for
@@ -35,34 +21,18 @@ import org.apache.spark.sql.functions._
   */
 object Ids {
 
-  /** Mint a dense 1-based surrogate id column ordered by `order`, without a
-    * single-partition sort. Equivalent to
-    * `row_number().over(Window.orderBy(order))` for unique order keys.
+  /** Mint a dense 1-based surrogate id column `idName` ordered by `order`
+    * (ascending, nulls first, as `orderBy`), appended as the last column.
+    * Equal to a global `row_number` window ordered by `order`; where the
+    * order key has ties, the ids of one mint are still dense and distinct.
+    *
+    * Eager, like [[graft.core.Stages.cut]]: the sort's shuffle and one
+    * count job run when this is called. The result plans over the
+    * numbered RDD, so its lineage starts at the sort's shuffle output.
     */
-  def denseId(df: DataFrame, idName: String, order: Seq[Column],
-              numPartitions: Int = 0): DataFrame = {
-    val spark = df.sparkSession
-    val n = if (numPartitions > 0) numPartitions
-            else spark.sessionState.conf.numShufflePartitions
-    // Range partitions are ordered by index, so (partitionId, localRank) is
-    // a total order consistent with `order` regardless of where the sampled
-    // boundaries fall.
-    val ranged = df.repartitionByRange(n, order: _*)
-      .sortWithinPartitions(order: _*)
-      .withColumn("__mono", monotonically_increasing_id())
-      .withColumn("__pid", shiftright(col("__mono"), 33))
-      .withColumn("__lrank", col("__mono").bitwiseAND(lit((1L << 33) - 1)))
-      .drop("__mono")
-    // Tiny frame: one row per partition. The window here is single-partition
-    // over ≤ n rows — that's the point (prefix sum of partition counts).
-    val wOff = Window.orderBy(col("__pid"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = ranged.groupBy(col("__pid"))
-      .agg(count(lit(1)).as("__cnt"))
-      .withColumn("__offset", coalesce(sum(col("__cnt")).over(wOff), lit(0L)))
-      .drop("__cnt")
-    ranged.join(broadcast(offsets), Seq("__pid"))
-      .withColumn(idName, (col("__offset") + col("__lrank") + 1L).cast("long"))
-      .drop("__pid", "__lrank", "__offset")
+  def denseId(df: DataFrame, idName: String, order: Seq[Column]): DataFrame = {
+    val sorted = df.orderBy(order: _*)
+    val rows = sorted.rdd.zipWithIndex().map { case (r, i) => Row.fromSeq(r.toSeq :+ (i + 1)) }
+    df.sparkSession.createDataFrame(rows, sorted.schema.add(idName, LongType, nullable = false))
   }
 }

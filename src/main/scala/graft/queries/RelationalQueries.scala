@@ -124,9 +124,9 @@ object RelationalQueries {
         .orderBy("l_suppkey")
     }),
 
-    // W2: surrogate-id minting — the distributed dense-rank operator
-    // (range partition + partition-local ranks + broadcast offsets), not a
-    // single-partition global window. Same values, oracle-checked.
+    // W2: surrogate-id minting — Ids.denseId (one range-partitioned sort
+    // numbered by zipWithIndex), not a single-partition global window.
+    // Same values as row_number, oracle-checked.
     "q11_surrogate_ids" -> ((s, dir) => {
       graft.operators.Ids.denseId(
           Tables(s, dir, "part").select("p_brand").distinct(),

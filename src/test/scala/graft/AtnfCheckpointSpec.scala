@@ -33,6 +33,19 @@ class AtnfCheckpointSpec extends SparkSuite {
     assert(view.count() === 2)
   }
 
+  test("known_pulsar_id is exactly 1..n in known_ps.name order") {
+    import spark.implicits._
+    val csv = Files.createTempDirectory("atnf_ids").resolve("cat.csv")
+    val names = Seq("J1939+2134", "B0531+21", "J0437-4715", "J2145-0750", "J0034-0534")
+    Files.writeString(csv, ("NAME,RAJ,DECJ,DM,W50,P0" +:
+      names.map(n => s"$n,04:37:15.99,-47:15:09.7,2.64,0.141,0.005757")).mkString("", "\n", "\n"))
+    val got = AtnfTransform.extract(spark, csv.toString,
+        java.sql.Timestamp.valueOf("2024-01-01 00:00:00"))
+      .select(c("known_pulsar_id"), c("known_ps.name")).as[(Long, String)].collect()
+      .sortBy(_._1).toSeq
+    assert(got === (1L to names.size.toLong).zip(names.sorted))
+  }
+
   test("live HTTP catalogue fetch: retry on 5xx, snapshot reuse, 4xx typed (S7)") {
     import com.sun.net.httpserver.{HttpExchange, HttpServer}
     val csvBody =

@@ -2,11 +2,11 @@ package graft
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Window => LogicalWindow}
+import org.apache.spark.sql.catalyst.plans.logical.{Window => LogicalWindow}
 import graft.operators.Ids
 
-/** Distributed dense-rank surrogate ids (W2): same values as a global
-  * `row_number` window, no single-partition sort of the frame.
+/** Dense surrogate ids (W2): same values as a global `row_number` window,
+  * minted from one sort numbered by `zipWithIndex`, no window at all.
   */
 class IdsSpec extends SparkSuite {
 
@@ -23,10 +23,15 @@ class IdsSpec extends SparkSuite {
 
   test("denseId ids are dense, contiguous, 1-based") {
     import spark.implicits._
-    val df = (1 to 997).map(i => (i * 7 % 997, i)).toDF("k", "v").repartition(8)
-    val ids = Ids.denseId(df, "id", Seq(col("k"))).select("id").as[Long]
-      .collect().sorted
-    assert(ids.toSeq === (1L to 997L))
+    // Unique keys, then a key with ties: ties break arbitrarily, but ids
+    // stay dense and distinct and the key order holds across them.
+    for ((n, key) <- Seq((997, (i: Int) => i * 7 % 997), (500, (i: Int) => i % 3))) {
+      val df = (1 to n).map(i => (key(i), i)).toDF("k", "v").repartition(8)
+      val ids = Ids.denseId(df, "id", Seq(col("k"))).select("k", "id").as[(Int, Long)]
+        .collect()
+      assert(ids.map(_._2).sorted.toSeq === (1L to n.toLong))
+      assert(ids.sortBy(_._2).map(_._1).toSeq === ids.map(_._1).sorted.toSeq)
+    }
   }
 
   test("denseId with multi-column order matches lexicographic rank") {
@@ -38,16 +43,30 @@ class IdsSpec extends SparkSuite {
     assert(got === Seq((1, "a"), (1, "z"), (2, "a"), (2, "b"), (3, "m")))
   }
 
-  test("denseId plan has no unpartitioned window over the input frame") {
+  test("denseId plan has no Window node at all") {
     import spark.implicits._
     val df = (1 to 100).map(i => (s"k$i", i)).toDF("k", "v").repartition(8)
     val out = Ids.denseId(df, "id", Seq(col("k")))
-    // The only global window allowed is the prefix-sum of per-partition
-    // counts, which sits strictly above an Aggregate (≤ numPartitions rows).
-    val offenders = out.queryExecution.optimizedPlan.collect {
-      case w: LogicalWindow if w.partitionSpec.isEmpty &&
-        w.collectFirst { case a: Aggregate => a }.isEmpty => w
-    }
-    assert(offenders.isEmpty)
+    assert(out.queryExecution.optimizedPlan.collect { case w: LogicalWindow => w }.isEmpty)
+  }
+
+  test("denseId numbers the rows it sorted, even when the source reorders on every evaluation") {
+    import spark.implicits._
+    val before = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "4")
+    try {
+      // Same rows on every evaluation, in a new order within each partition;
+      // the payload `v` keeps the sort wider than its order key.
+      val rows = (1 to 20000).map(i => (i % 7, i, s"v$i"))
+      val df = spark.sparkContext.parallelize(rows, 2)
+        .mapPartitions(it => scala.util.Random.shuffle(it.toList).iterator)
+        .toDF("g", "k", "v")
+      val got = Ids.denseId(df, "id", Seq(col("g"), col("k")))
+        .select("id", "v").as[(Long, String)].collect()
+      assert(got.map(_._1).sorted.toSeq === (1L to 20000L))
+      val want = df.withColumn("id", row_number().over(Window.orderBy("g", "k")).cast("long"))
+        .select("id", "v").as[(Long, String)].collect()
+      assert(got.toMap === want.toMap)
+    } finally spark.conf.set("spark.sql.shuffle.partitions", before)
   }
 }

@@ -185,12 +185,14 @@ class PlanQualitySpec extends SparkSuite {
 
   test("q11 dense-id minting has no single-partition exchange") {
     val plan = formatted("q11_surrogate_ids")
-    // The distributed id operator: a RANGE exchange does the ordering work
-    // in parallel; the only SinglePartition exchange allowed is the final
-    // tiny orderBy of the ≤N-brand result / offsets prefix-sum, never an
-    // exchange feeding a Window over the input rows.
-    assert(plan.contains("rangepartitioning"))
-    assert(plan.contains("monotonically_increasing_id"))
+    // Ids.denseId sorts with a RANGE exchange and numbers that sorted RDD
+    // with zipWithIndex while the query is built: the query plans over the
+    // numbered RDD, with no window, no offsets join and no SinglePartition
+    // exchange.
+    assert(plan.contains("ExistingRDD"))
+    assert(!plan.contains("Window"))
+    assert(!plan.contains("SinglePartition"))
+    assert(!plan.contains("monotonically_increasing_id"))
   }
 
   test("q61 containment runs the rarest-shingle index + sorted-merge verify") {

@@ -82,6 +82,22 @@ class MeertrapPipelineSpec extends SparkSuite {
     assert(math.abs(r.getDouble(2) - 70.07113) < 1e-9)
   }
 
+  test("tiling ids follow tiling_config's unique key: a method-only pair in method order") {
+    def tiling(method: String) =
+      "named_struct('coordinate_type', 'equatorial', 'epoch', 1700517405.395673D, " +
+      s"'epoch_offset', 300.0D, 'method', '$method', 'nbeams', 780L, 'overlap', 0.25D, " +
+      "'reference_frequency', 1284000000.0D, 'shape', 'circle', " +
+      "'target', 'J0440-4333, radec gaincal, 4:40:17.07, -43:33:09.0')"
+    val tMin = "timestamp'2023-11-20 21:57:11' AS `obs.t_min`"
+    val obsUniq = spark.range(1).selectExpr(tMin,
+      s"array(${tiling("variable_size")}, ${tiling("fixed_size")}) AS `beams.tilings`")
+    val obs = spark.range(1).selectExpr(tMin, "7L AS observation_id")
+    val ids = ObservationTransform.tilingDf(obsUniq, obs)
+      .select(c("tiling.method"), c("tiling_config_id")).collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(ids === Map("fixed_size" -> 1L, "variable_size" -> 2L))
+  }
+
   test("wide frame has no null ids (reference merge invariant)") {
     // transform() would have thrown otherwise; spot-check shape
     assert(out.observation.wide.count() > 0)
@@ -232,26 +248,17 @@ class MeertrapPipelineSpec extends SparkSuite {
   }
 
   test("candidate path: no single-partition window over unaggregated rows (W2 at scale)") {
-    // VERDICT r2 #1: surrogate ids on the fact-table path must not funnel
-    // the frame through one partition. The only global windows allowed are
-    // (a) over an Aggregate (the denseId partition-count prefix sum, ≤
-    // numPartitions rows) or (b) on frames small by construction (sb,
-    // host, cbConfig — not on this path).
+    // Surrogate ids must not funnel a frame through one partition: every id
+    // comes from Ids.denseId, so no plan on this path (nor the ATNF
+    // extract) holds an unpartitioned window at all.
+    import java.nio.file.Files
     import scala.jdk.CollectionConverters._
-    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan, UnaryNode, Window => LWin}
+    import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Window => LWin}
     import org.apache.spark.sql.execution.QueryExecution
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.util.QueryExecutionListener
-    // "Over an Aggregate" means the window's own input chain reaches one
-    // before any join or leaf — an Aggregate in some other join branch
-    // (cbConfig's dropDuplicates, a denseId prefix sum) bounds nothing.
-    def overAggregate(p: LogicalPlan): Boolean = p match {
-      case _: Aggregate => true
-      case u: UnaryNode => overAggregate(u.child)
-      case _            => false
-    }
     def offenders(plan: LogicalPlan) = plan.collect {
-      case w: LWin if w.partitionSpec.isEmpty && !overAggregate(w.child) => w
+      case w: LWin if w.partitionSpec.isEmpty => w
     }
     // Negative control: the audit flags a global row_number over raw rows.
     val raw = spark.range(10).toDF("v")
@@ -279,13 +286,14 @@ class MeertrapPipelineSpec extends SparkSuite {
     val stages = materialized.asScala.toList
     // sb, obsUniq, obs, beams, the candidate as-of join
     assert(stages.size === 5, s"expected 5 stage boundaries, got ${stages.size}")
-    // sb carries the schedule-block window, bounded by construction (b)
-    val (sbStage, rest) = stages.partition(_.output.exists(_.name == "meerkat_schedule_block_id"))
-    assert(sbStage.size === 1)
-    rest.foreach(p => assert(offenders(p).isEmpty, p.treeString))
+    stages.foreach(p => assert(offenders(p).isEmpty, p.treeString))
     // Frames planned over those leaves: tilingDf, the hosts join, and the
-    // candidate dedup + sp_candidate ids.
-    Seq(fresh.observation.tiling, fresh.observation.beam, fresh.candidates)
+    // candidate dedup + sp_candidate ids; and the ATNF catalogue ids.
+    val atnfCsv = Files.createTempDirectory("atnf").resolve("cat.csv")
+    Files.writeString(atnfCsv, "NAME,RAJ,DECJ,DM,W50,P0\nJ0437-4715,04:37:15.99,-47:15:09.7,2.64,0.141,0.005757\n")
+    val atnf = graft.atnf.AtnfTransform.extract(spark, atnfCsv.toString,
+      java.sql.Timestamp.valueOf("2024-01-01 00:00:00"))
+    Seq(fresh.observation.tiling, fresh.observation.beam, fresh.candidates, atnf)
       .foreach(df => assert(offenders(df.queryExecution.optimizedPlan).isEmpty))
   }
 
