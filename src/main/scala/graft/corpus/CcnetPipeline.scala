@@ -54,11 +54,12 @@ object CcnetPipeline {
                            joinSep: String = "\n\n") extends DedupStage
   /** Incremental dedup against a persistent fingerprint registry — the
     * batch-over-batch flavor: paragraphs already registered by an
-    * earlier batch drop, this batch's new winners append. `batchId`
-    * makes re-delivery idempotent (the registry's `_batches` ledger).
+    * earlier batch drop, this batch's new winners append exactly once
+    * under `batchId` (a re-delivered id re-derives the same output
+    * without appending — the registry store's `_committed` markers).
     */
   final case class Incremental(registry: ParagraphRegistry,
-                               batchId: Option[Long] = None) extends DedupStage
+                               batchId: Long) extends DedupStage
 
   /** `lmOrder` 1 = per-language unigram (the KenLM stand-in CCNet's
     * published scores approximate); 3 = interpolated trigram
@@ -105,7 +106,7 @@ object CcnetPipeline {
         Paragraphs.dedupFirstByShard(classified0, textCol, idCol, "lang",
           splitRegex, joinSep)
       case Incremental(registry, batchId) =>
-        registry.dedupeBatch(classified0, textCol, idCol, "lang", batchId)
+        registry.dedupeBatch(classified0, textCol, idCol, "lang", Some(batchId))
     }
     // Stage boundaries are eager cuts, not persists ([[graft.core.Stages]]):
     // the crawl-fed compositions (q160/q164/q166) carry expression trees

@@ -415,8 +415,9 @@ object Bm25 {
   /** PERSISTENT inverted index: the tf frame on disk as batch-appended
     * parquet ([[graft.load.IdempotentParquetSink]] — exactly-once per
     * batch id), the durable form of the object doc's "build once,
-    * persist, serve every query batch" — and the retrieval twin of
-    * [[graft.streaming.StreamingDedup.LshIndex]]'s on-disk registry.
+    * persist, serve every query batch". The streaming dedup indexes
+    * ([[graft.streaming.StreamingDedup.LshIndex]] and its vector and
+    * paragraph twins) persist through the same sink.
     *
     * Doc lengths and corpus stats derive from the stored tf at read
     * (one aggregation over the index, never a second text scan), so an

@@ -2263,53 +2263,47 @@ object TextQueries {
     val sig = graft.operators.Dedup
       .minhashSignaturesGen(docs, "doc_id", "text", 3, 64)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val ixRoots = scala.collection.mutable.ListBuffer.empty[java.nio.file.Path]
-    def freshIx() = {
-      val root = java.nio.file.Files.createTempDirectory("graft_q57_ix")
-      ixRoots += root
-      new graft.streaming.StreamingDedup.LshIndex(
-        root.toString + "/ix",
-        shingleN = 3, numHashes = 64, bands = 16, threshold = 0.9)
-    }
-    val ix = freshIx()
+    val ixRoot = java.nio.file.Files.createTempDirectory("graft_q57_ix")
+    def lshIndex(name: String) = new graft.streaming.StreamingDedup.LshIndex(
+      ixRoot.resolve(name).toString,
+      shingleN = 3, numHashes = 64, bands = 16, threshold = 0.9)
+    val ix = lshIndex("ix")
     // Batches split at the median id: arrival order consistent with the
     // greedy keep-lowest-id order (the realistic time-ordered stream) —
     // an id-interleaved split would legitimately diverge from one-shot
     // (keep-first-ARRIVED vs keep-lowest-id).
     val mid = docs.agg(expr("approx_percentile(doc_id, 0.5)")).head().getLong(0)
     val s1 = ix.dedupeBatch(docs.where(col("doc_id") <= mid), "text", "doc_id",
-      precomputedSig = Some(sig.where(col("id") <= mid)))
+      Some(0L), precomputedSig = Some(sig.where(col("id") <= mid)))
     // Compact the index mid-stream (batch 1 appended, batch 2 probes the
     // COMPACTED layout): the maintenance path runs under the driver's
     // parity gate, not just in specs — a compaction that corrupted or
     // dropped index rows would break batch 2's dedup and fail parity.
     ix.compact(s)
     val s2 = ix.dedupeBatch(docs.where(col("doc_id") > mid), "text", "doc_id",
-      precomputedSig = Some(sig.where(col("id") > mid)))
+      Some(1L), precomputedSig = Some(sig.where(col("id") > mid)))
     val incremental = s1.select("doc_id").union(s2.select("doc_id"))
-    // Comparator pass (gated only): same semantics, but its index would
-    // never be probed — skip the partitioned parquet append (and tempdir).
+    // Comparator pass (gated only): same semantics against an empty
+    // index, probe only (batchId None) — its index would never be probed.
     val out =
       if (!gated) incremental
       else {
-        val oneShot = freshIx().dedupeBatch(docs, "text", "doc_id",
-          precomputedSig = Some(sig), appendToIndex = false).select("doc_id")
+        val oneShot = lshIndex("one_shot").dedupeBatch(docs, "text", "doc_id",
+          None, precomputedSig = Some(sig)).select("doc_id")
         Gates.setParity(incremental, oneShot, "doc_id")
       }
     // dedupeBatch's heavy work (probes, appends, drop-set checkpoints)
     // ran EAGERLY above; the frames returned here only re-read docs for
     // the final anti-joins. The build owns the shared persists.
     graft.core.Frames.own(s, docs, sig)
-    // The index dirs are likewise DEAD already: every index read/write
+    // The index dir is likewise DEAD already: every index read/write
     // happened inside the eager dedupeBatch passes, and the returned
     // frames anti-join only the localCheckpoint'd drop-sets. Delete the
-    // temp indexes now instead of leaking one pair per invocation.
-    ixRoots.foreach { root =>
-      val walk = java.nio.file.Files.walk(root)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => java.nio.file.Files.deleteIfExists(p))
-      finally walk.close()
-    }
+    // temp index now instead of leaking one per invocation.
+    val walk = java.nio.file.Files.walk(ixRoot)
+    try walk.sorted(java.util.Comparator.reverseOrder())
+      .forEach(p => java.nio.file.Files.deleteIfExists(p))
+    finally walk.close()
     out.orderBy("doc_id")
   }
 

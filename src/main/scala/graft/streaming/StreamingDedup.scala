@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.core.Stages
+import graft.load.IdempotentParquetSink
 import graft.functions.TextFns
 import graft.operators.Dedup
 
@@ -73,14 +74,12 @@ object StreamingDedup {
     * and `LmScore`/`Decontaminate`. Appends are per-batch parquet writes;
     * compaction is an offline concern like any log-structured store.
     *
-    * Durability contract (at-least-once): the `_batches/<id>` marker is
-    * created AFTER the survivors' append commits, so a crash between the
-    * two makes re-delivery append the batch's band rows a second time.
-    * This window is deliberate — the reverse order (marker first) would
-    * SKIP the append on re-delivery and lose index rows. Duplicate index
-    * rows never change dedup output (candidate drops are verified and
-    * `distinct`-ed), they only bloat the index; [[LshIndex.compact]]
-    * scrubs them.
+    * Durability contract (exactly-once): the rows live in [[store]], a
+    * band-partitioned [[graft.load.IdempotentParquetSink]] — each batch id
+    * writes its own directory with overwrite and commits by a
+    * `_committed/<id>` marker created after the write, so a crash before
+    * the marker leaves an invisible partial that the re-delivery
+    * overwrites, and a committed id never appends twice.
     */
   final class LshIndex(
       val dir: String,
@@ -92,8 +91,12 @@ object StreamingDedup {
     require(numHashes % bands == 0, "numHashes must divide into bands")
     private val rowsPerBand = numHashes / bands
 
-    private def indexExists(spark: SparkSession): Boolean =
-      IndexMaintenance.indexExists(spark, dir)
+    /** The index rows (id, sig, band, bh). Compaction writes one file set
+      * per band, sorted by bucket hash so row-group min/max stats prune
+      * probes within a band.
+      */
+    val store = new IdempotentParquetSink(dir, Seq("band"),
+      compactLayout = _.repartition(bands, col("band")).sortWithinPartitions("bh"))
 
     /** Dedup one micro-batch against the index AND within itself; append
       * the survivors' band rows to the index; return the surviving rows of
@@ -107,21 +110,17 @@ object StreamingDedup {
       * RETRY SAFETY (foreachBatch is at-least-once): index matches with
       * the probe doc's OWN id are excluded — a re-delivered batch whose
       * rows already reached the index re-derives the SAME survivors
-      * instead of dropping everything as "dup of itself". With `batchId`
-      * set (the streaming path), the index append is also skipped when
-      * that batch id already committed (`_batches/<id>` marker, invisible
-      * to parquet reads), so retries re-deliver identical output without
-      * re-appending.
-      */
-    /** @param appendToIndex false runs the SAME dedup semantics but skips
-      *   the index append — for one-shot comparator passes (e.g. the q57
-      *   batch-parity gate) whose index would never be probed, the
-      *   partitioned parquet write is pure waste.
+      * instead of dropping everything as "dup of itself".
+      *
+      * @param batchId `Some(id)` appends the survivors' band rows to
+      *   [[store]] exactly once under that id (a re-delivered committed
+      *   id skips the append); `None` probes only — for one-shot
+      *   comparator passes (e.g. the q57 batch-parity gate) whose index
+      *   would never be probed.
       */
     def dedupeBatch(batch: DataFrame, textCol: String, idCol: String,
-                    batchId: Option[Long] = None,
-                    precomputedSig: Option[DataFrame] = None,
-                    appendToIndex: Boolean = true): DataFrame = {
+                    batchId: Option[Long],
+                    precomputedSig: Option[DataFrame] = None): DataFrame = {
       val spark = batch.sparkSession
       // Callers running several passes over overlapping corpora (e.g. the
       // q57 parity gate) can precompute + cache one (id, sig) frame and
@@ -137,9 +136,10 @@ object StreamingDedup {
       // vs index: probe the big index with the (typically small) batch.
       // No broadcast hint — AQE picks the build side from runtime sizes,
       // so a large backfill batch degrades to a plan change, not an OOM.
+      val indexed = store.read(spark)
       val dupVsIndex: DataFrame =
-        if (indexExists(spark)) {
-          spark.read.parquet(dir).as("ix")
+        if (indexed.columns.nonEmpty) {
+          indexed.as("ix")
             .join(banded.as("nw"),
               col("ix.band") === col("nw.band") && col("ix.bh") === col("nw.bh") &&
                 col("ix.id") =!= col("nw.id"))
@@ -162,32 +162,11 @@ object StreamingDedup {
       val dropIds = dupVsIndex.union(dupInBatch).distinct()
         .transform(Stages.cut)
 
-      // Append survivors' band rows (partitioned by band for pruning) —
-      // unless this batch id already committed (idempotent re-delivery).
-      if (appendToIndex) {
-        val fsys = new org.apache.hadoop.fs.Path(dir)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val markerPath = batchId.map(id => new org.apache.hadoop.fs.Path(s"$dir/_batches/$id"))
-        if (!markerPath.exists(fsys.exists)) {
-          val survivors = banded.join(dropIds, Seq("id"), "left_anti")
-          // A batch whose rows were all filtered (nothing to shingle) or
-          // all dropped must not append: an empty append on a fresh dir
-          // leaves a data-less `_SUCCESS`-only index the next batch
-          // cannot read. The marker is still written — the batch IS
-          // processed, re-delivery has nothing to redo.
-          if (!survivors.isEmpty) {
-            // one file per touched band per batch (vs shuffle-partitions x
-            // bands): the batch-sized repartition is cheap, and probe-side
-            // file listings + the compaction backlog shrink 30x
-            survivors.repartition(col("band"))
-              .write.mode("append").partitionBy("band").parquet(dir)
-          }
-          // Marker AFTER the data commits: see the durability contract in
-          // the class Scaladoc (a crash in between re-appends once;
-          // duplicates are output-invisible and compact() scrubs them).
-          markerPath.foreach { m => fsys.mkdirs(m.getParent); fsys.create(m, true).close() }
-        }
-      }
+      // Append survivors' band rows (one file per touched band per batch:
+      // the batch-sized repartition is cheap, and probe-side listings and
+      // the compaction backlog shrink).
+      batchId.foreach(id => store.append(
+        banded.join(dropIds, Seq("id"), "left_anti").repartition(col("band")), id))
       banded.unpersist()
 
       // Survivors keep their original columns. Docs that produced no
@@ -197,13 +176,11 @@ object StreamingDedup {
         col(s"`$idCol`") === col("__did"), "left_anti")
     }
 
-    /** Maintenance: [[IndexMaintenance.compact]] (shared with the vector
-      * index) — rewrite each band partition as `filesPerBand` files
-      * sorted by bucket hash `bh`, scrub append/marker crash-window
-      * duplicates, recover from a previously crashed compact.
+    /** Maintenance: fold every committed batch into one compaction
+      * generation of [[store]]. `force` keeps the rule that a compact
+      * always rewrites the layout, even over a single batch.
       */
-    def compact(spark: SparkSession, filesPerBand: Int = 1): Unit =
-      IndexMaintenance.compact(spark, dir, bands, filesPerBand, "bh")
+    def compact(spark: SparkSession): Unit = store.compact(spark, force = true)
   }
 
   /** Wire a document stream through an [[LshIndex]]: drain available input
@@ -218,12 +195,11 @@ object StreamingDedup {
     * .streamingWriter]] convention: id-keyed, so restarts never drift
     * the schedule; 0 = append-only) — a long-lived registry otherwise
     * accumulates one file set per touched band per micro-batch.
-    * Running INSIDE foreachBatch satisfies the maintenance contract's
-    * "batches paused" single-writer rule by construction: Structured
-    * Streaming serializes micro-batches, so the swap never races an
-    * append, and the batch-id ledger riding through the swap keeps a
-    * re-delivered batch id skipping afterwards. A compact re-run after
-    * a crash-redelivery is idempotent (recover + rewrite).
+    * Running INSIDE foreachBatch satisfies the sink's offline-compaction
+    * contract by construction: Structured Streaming serializes
+    * micro-batches, so a compaction never races an append, and the
+    * `_committed` markers it never deletes keep a re-delivered batch id
+    * skipping afterwards.
     */
   def nearDupAvailableNow(
       docs: DataFrame,
@@ -232,8 +208,7 @@ object StreamingDedup {
       idCol: String,
       checkpoint: String,
       onSurvivors: (DataFrame, Long) => Unit,
-      compactEvery: Int = 0,
-      filesPerBand: Int = 1
+      compactEvery: Int = 0
   ): StreamingQuery = {
     require(compactEvery >= 0, s"compactEvery must be >= 0: $compactEvery")
     docs.writeStream
@@ -242,7 +217,7 @@ object StreamingDedup {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         onSurvivors(index.dedupeBatch(batch, textCol, idCol, Some(batchId)), batchId)
         if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
-          index.compact(batch.sparkSession, filesPerBand)
+          index.compact(batch.sparkSession)
       }
       .start()
   }

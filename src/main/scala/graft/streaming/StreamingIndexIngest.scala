@@ -47,9 +47,9 @@ object StreamingIndexIngest {
   /** The VECTOR twin of [[run]] — the same landing-dir ingestion story
     * for the persistent embedding band index
     * ([[StreamingVectorDedup.VectorBandIndex]]): file-source
-    * checkpointing (a restart never re-drains a file; the index's
-    * `_batches/<id>` ledger additionally makes a re-DELIVERED batch a
-    * no-op), per-batch dedup against the registry and within the batch,
+    * checkpointing (a restart never re-drains a file; the index store's
+    * `_committed/<id>` markers additionally make a re-DELIVERED batch's
+    * append a no-op), per-batch dedup against the registry and within the batch,
     * survivors' band rows appended, and — maintenance ON by default —
     * [[StreamingVectorDedup.VectorBandIndex.compact]] after every
     * `compactEvery`-th batch id (id-keyed, restart-stable; single-writer
@@ -65,13 +65,12 @@ object StreamingIndexIngest {
                 vecCol: String, checkpoint: String, compactEvery: Int = 64,
                 maxFilesPerTrigger: Int = 0,
                 onSurvivors: (org.apache.spark.sql.DataFrame, Long) => Unit =
-                  (_, _) => (),
-                filesPerBand: Int = 1): StreamingQuery = {
+                  (_, _) => ()): StreamingQuery = {
     require(compactEvery >= 0, s"compactEvery must be >= 0: $compactEvery")
     StreamingVectorDedup.nearDupAvailableNow(
       landingStream(spark, landingGlob, schema, maxFilesPerTrigger),
       index, vecCol, idCol, checkpoint, onSurvivors,
-      compactEvery = compactEvery, filesPerBand = filesPerBand)
+      compactEvery = compactEvery)
   }
 
   private def landingStream(spark: SparkSession, landingGlob: String,

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.Stages
 import graft.functions.TextFns
+import graft.load.IdempotentParquetSink
 
 /** Incremental CCNet PARAGRAPH-HASH dedup against a persistent
   * fingerprint registry — the streaming twin of
@@ -27,16 +28,15 @@ import graft.functions.TextFns
   * winner coordinates make at-least-once re-delivery re-derive the
   * IDENTICAL output: a re-delivered batch finds its own winners in the
   * registry, and the probe drops a paragraph only when the registered
-  * winner is NOT itself. The `(id, band)` shape matches
-  * [[IndexMaintenance]]'s contract exactly (equal (id, band) implies an
-  * identical row — one winner per key by the single-writer rule), so
-  * compaction/scrubbing/crash recovery are the shared machinery.
+  * winner is NOT itself.
   *
-  * Durability: the `_batches/<id>` marker is created AFTER the append
-  * commits (the family-wide at-least-once contract) — a crash between
-  * the two re-appends identical rows once; duplicates are
-  * output-invisible (the probe is an anti-join, set semantics) and
-  * [[ParagraphRegistry.compact]] scrubs them.
+  * Durability (exactly-once, the family-wide contract): the rows live
+  * in [[ParagraphRegistry.store]], a band-partitioned
+  * [[graft.load.IdempotentParquetSink]] — each batch id writes its own
+  * directory with overwrite and commits by a `_committed/<id>` marker
+  * created after the write, so a crash before the marker leaves an
+  * invisible partial that the re-delivery overwrites, and a committed
+  * id never appends twice.
   *
   * Scale shape: the probe anti-joins a batch-sized paragraph frame
   * against the band-pruned registry scan (AQE picks the build side);
@@ -70,21 +70,26 @@ object StreamingParagraphDedup {
         coalesce(col(s"`$idCol`").cast("string"), lit("NULL")))))
     }
 
-    private def indexExists(spark: SparkSession): Boolean =
-      IndexMaintenance.indexExists(spark, dir)
+    /** The registry rows (id, band, wid, widx). Compaction writes one
+      * file set per band, sorted by key.
+      */
+    val store = new IdempotentParquetSink(dir, Seq("band"),
+      compactLayout = _.repartition(buckets, col("band")).sortWithinPartitions("id"))
 
     /** Dedup one batch against the registry AND within itself; append
       * the new winners; return the surviving rows of `batch` (original
       * columns, text re-assembled from surviving paragraphs in
-      * positional order). With `batchId` set, a batch whose
-      * `_batches/<id>` marker exists skips the append and re-derives
-      * identical output (the registered winners are its own). `idCol`
-      * must be non-null and long-castable (see [[winnerId]]) — violations
-      * raise in-plan rather than silently disabling the dedup.
+      * positional order). A re-delivered committed batch skips the
+      * append and re-derives identical output (the registered winners
+      * are its own). `idCol` must be non-null and long-castable (see
+      * [[winnerId]]) — violations raise in-plan rather than silently
+      * disabling the dedup.
+      *
+      * @param batchId `Some(id)` appends the new winners to [[store]]
+      *   exactly once under that id; `None` probes only.
       */
     def dedupeBatch(batch: DataFrame, textCol: String, idCol: String,
-                    shardCol: String, batchId: Option[Long] = None,
-                    appendToIndex: Boolean = true): DataFrame = {
+                    shardCol: String, batchId: Option[Long]): DataFrame = {
       val spark = batch.sparkSession
       val carried = batch.columns.filterNot(_ == textCol)
       val paras = batch.where(col(s"`$textCol`").isNotNull)
@@ -102,12 +107,13 @@ object StreamingParagraphDedup {
       // vs registry: drop unless the registered winner is this very
       // paragraph (the re-delivery identity). Partition-prune the scan
       // to the batch's bands — a bounded driver read (≤ `buckets`).
+      val registered = store.read(spark)
       val fresh =
-        if (!indexExists(spark)) paras
+        if (registered.columns.isEmpty) paras
         else {
           val bands = paras.select("__band").distinct()
             .collect().map(_.getLong(0))
-          val reg = spark.read.parquet(dir)
+          val reg = registered
             .where(col("band").isin(bands: _*))
             .select(col("id").as("__rkey"), col("wid"), col("widx"))
           paras.join(reg,
@@ -126,27 +132,10 @@ object StreamingParagraphDedup {
         .select(col("__w.*"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
 
-      if (appendToIndex) {
-        val fsys = new org.apache.hadoop.fs.Path(dir)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val markerPath = batchId.map(id =>
-          new org.apache.hadoop.fs.Path(s"$dir/_batches/$id"))
-        if (!markerPath.exists(fsys.exists)) {
-          val rows = winners.select(col("__key").as("id"),
-            col("__band").as("band"),
-            col("__wid").as("wid"),
-            col("para_idx").cast("long").as("widx"))
-          // empty appends would leave a data-less dir the next probe
-          // cannot read (the family-wide convention)
-          if (!rows.isEmpty) {
-            rows.repartition(col("band"))
-              .write.mode("append").partitionBy("band").parquet(dir)
-          }
-          markerPath.foreach { m =>
-            fsys.mkdirs(m.getParent); fsys.create(m, true).close()
-          }
-        }
-      }
+      batchId.foreach(id => store.append(
+        winners.select(col("__key").as("id"), col("__band").as("band"),
+            col("__wid").as("wid"), col("para_idx").cast("long").as("widx"))
+          .repartition(col("band")), id))
       val out = winners
         .groupBy(carried.map(c => col(s"`$c`")): _*)
         .agg(array_join(
@@ -158,20 +147,20 @@ object StreamingParagraphDedup {
       out
     }
 
-    /** Maintenance: the shared [[IndexMaintenance.compact]] — rewrite
-      * each band partition as `filesPerBand` files sorted by key,
-      * scrubbing append/marker crash-window duplicates.
+    /** Maintenance: fold every committed batch into one compaction
+      * generation of [[store]] (forced: a compact always rewrites the
+      * layout, even over a single batch).
       */
-    def compact(spark: SparkSession, filesPerBand: Int = 1): Unit =
-      IndexMaintenance.compact(spark, dir, buckets, filesPerBand, "id")
+    def compact(spark: SparkSession): Unit = store.compact(spark, force = true)
   }
 
   /** Drain available input through a [[ParagraphRegistry]] — the
     * paragraph twin of [[StreamingDedup.nearDupAvailableNow]]:
-    * file-source checkpointing plus the batch-id ledger make the drain
-    * exactly-once under crash re-delivery; `compactEvery > 0` schedules
-    * maintenance after every `compactEvery`-th batch id (id-keyed,
-    * restart-stable, single-writer inside foreachBatch).
+    * file-source checkpointing plus the store's `_committed` markers
+    * make the drain exactly-once under crash re-delivery;
+    * `compactEvery > 0` schedules maintenance after every
+    * `compactEvery`-th batch id (id-keyed, restart-stable, single-writer
+    * inside foreachBatch).
     */
   def dedupAvailableNow(
       docs: DataFrame,
@@ -181,8 +170,7 @@ object StreamingParagraphDedup {
       shardCol: String,
       checkpoint: String,
       onSurvivors: (DataFrame, Long) => Unit,
-      compactEvery: Int = 0,
-      filesPerBand: Int = 1
+      compactEvery: Int = 0
   ): org.apache.spark.sql.streaming.StreamingQuery = {
     require(compactEvery >= 0, s"compactEvery must be >= 0: $compactEvery")
     docs.writeStream
@@ -192,7 +180,7 @@ object StreamingParagraphDedup {
         onSurvivors(registry.dedupeBatch(batch, textCol, idCol, shardCol,
           Some(batchId)), batchId)
         if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
-          registry.compact(batch.sparkSession, filesPerBand)
+          registry.compact(batch.sparkSession)
       }
       .start()
   }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Stages
 import graft.functions.{VectorExpressions, VectorFns}
+import graft.load.IdempotentParquetSink
 
 /** Incremental EMBEDDING near-duplicate detection against a persistent
   * band-partitioned sign-LSH index — the vector analogue of
@@ -29,14 +30,13 @@ import graft.functions.{VectorExpressions, VectorFns}
   * partitioned by band; compaction is an offline concern like any
   * log-structured store.
   *
-  * Durability contract (at-least-once): the `_batches/<id>` marker is
-  * created AFTER the survivors' append commits, so a crash between the
-  * two makes re-delivery append the batch's band rows a second time.
-  * This window is deliberate — the reverse order (marker first) would
-  * SKIP the append on re-delivery and lose index rows. Duplicate index
-  * rows never change dedup output (candidate drops are verified and
-  * `distinct`-ed), they only bloat the index; [[VectorBandIndex.compact]]
-  * scrubs them.
+  * Durability contract (exactly-once): the rows live in
+  * [[VectorBandIndex.store]], a band-partitioned
+  * [[graft.load.IdempotentParquetSink]] — each batch id writes its own
+  * directory with overwrite and commits by a `_committed/<id>` marker
+  * created after the write, so a crash before the marker leaves an
+  * invisible partial that the re-delivery overwrites, and a committed id
+  * never appends twice.
   */
 object StreamingVectorDedup {
 
@@ -48,8 +48,12 @@ object StreamingVectorDedup {
   ) extends Serializable {
     require(bandBits > 0 && bandBits <= 63 && bands > 0, "invalid banding")
 
-    private def indexExists(spark: SparkSession): Boolean =
-      IndexMaintenance.indexExists(spark, dir)
+    /** The index rows (id, v, n, band, bucket). Compaction writes one
+      * file set per band, sorted by bucket so row-group min/max stats
+      * prune probes within a band.
+      */
+    val store = new IdempotentParquetSink(dir, Seq("band"),
+      compactLayout = _.repartition(bands, col("band")).sortWithinPartitions("bucket"))
 
     /** Dedup one batch against the index AND within itself; append the
       * survivors' band rows; return the surviving rows of `batch`
@@ -58,14 +62,15 @@ object StreamingVectorDedup {
       * Semantics mirror the text index: a row survives iff no verified
       * near-dup with a smaller id exists in the same batch and no
       * verified near-dup exists in the index. Index matches with the
-      * probe's OWN id are excluded, and with `batchId` set the append is
-      * skipped when that batch already committed (`_batches/<id>`
-      * marker) — at-least-once re-delivery re-derives identical output
-      * without re-appending (same retry contract as the text index).
+      * probe's OWN id are excluded, so at-least-once re-delivery
+      * re-derives identical output (same retry contract as the text
+      * index).
+      *
+      * @param batchId `Some(id)` appends the survivors' band rows to
+      *   [[store]] exactly once under that id; `None` probes only.
       */
     def dedupeBatch(batch: DataFrame, vecCol: String, idCol: String,
-                    batchId: Option[Long] = None,
-                    appendToIndex: Boolean = true): DataFrame = {
+                    batchId: Option[Long]): DataFrame = {
       val spark = batch.sparkSession
       val base = batch
         .select(col(s"`$idCol`").cast("long").as("id"),
@@ -87,9 +92,10 @@ object StreamingVectorDedup {
       // vs index: probe the big index with the (typically small) batch.
       // No broadcast hint — AQE picks the build side from runtime sizes,
       // so a large backfill batch degrades to a plan change, not an OOM.
+      val indexed = store.read(spark)
       val dupVsIndex: DataFrame =
-        if (indexExists(spark)) {
-          spark.read.parquet(dir).as("ix")
+        if (indexed.columns.nonEmpty) {
+          indexed.as("ix")
             .join(banded.as("nw"),
               col("ix.band") === col("nw.band") &&
                 col("ix.bucket") === col("nw.bucket") &&
@@ -109,54 +115,34 @@ object StreamingVectorDedup {
       val dropIds = dupVsIndex.union(dupInBatch).distinct()
         .transform(Stages.cut)
 
-      if (appendToIndex) {
-        val fsys = new org.apache.hadoop.fs.Path(dir)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val markerPath = batchId.map(id => new org.apache.hadoop.fs.Path(s"$dir/_batches/$id"))
-        if (!markerPath.exists(fsys.exists)) {
-          val survivors = banded.join(dropIds, Seq("id"), "left_anti")
-          // A batch whose rows were all filtered (null/empty vectors) or
-          // all dropped must not append: an empty append on a fresh dir
-          // leaves a data-less `_SUCCESS`-only index the next batch
-          // cannot read. The marker is still written — the batch IS
-          // processed, re-delivery has nothing to redo.
-          if (!survivors.isEmpty) {
-            survivors.repartition(col("band"))
-              .write.mode("append").partitionBy("band").parquet(dir)
-          }
-          // Marker AFTER the data commits: see the durability contract in
-          // the object Scaladoc (a crash in between re-appends once;
-          // duplicates are output-invisible and compact() scrubs them).
-          markerPath.foreach { m => fsys.mkdirs(m.getParent); fsys.create(m, true).close() }
-        }
-      }
+      batchId.foreach(id => store.append(
+        banded.join(dropIds, Seq("id"), "left_anti").repartition(col("band")), id))
       banded.unpersist()
 
       batch.join(dropIds.withColumnRenamed("id", "__did"),
         col(s"`$idCol`") === col("__did"), "left_anti")
     }
 
-    /** Maintenance: [[IndexMaintenance.compact]] (shared with the text
-      * index) — rewrite each band partition as `filesPerBand` files
-      * sorted by `bucket`, scrub append/marker crash-window duplicates,
-      * recover from a previously crashed compact.
+    /** Maintenance: fold every committed batch into one compaction
+      * generation of [[store]] (forced: a compact always rewrites the
+      * layout, even over a single batch).
       */
-    def compact(spark: SparkSession, filesPerBand: Int = 1): Unit =
-      IndexMaintenance.compact(spark, dir, bands, filesPerBand, "bucket")
+    def compact(spark: SparkSession): Unit = store.compact(spark, force = true)
   }
 
   /** Wire an embedding stream through a [[VectorBandIndex]] — the vector
     * twin of [[StreamingDedup.nearDupAvailableNow]]: drain available
     * input with `Trigger.AvailableNow`, dedup each micro-batch against
     * the persistent registry and within itself, hand survivors to
-    * `onSurvivors`. File-source checkpointing plus the batch-id ledger
-    * make the drain exactly-once under crash re-delivery.
+    * `onSurvivors`. File-source checkpointing plus the store's
+    * `_committed` markers make the drain exactly-once under crash
+    * re-delivery.
     *
     * `compactEvery > 0` schedules [[VectorBandIndex.compact]] after
     * every `compactEvery`-th batch id (id-keyed, restart-stable; 0 =
-    * append-only). Running inside foreachBatch satisfies the
-    * maintenance contract's single-writer rule by construction —
-    * micro-batches are serialized, so the swap never races an append.
+    * append-only). Running inside foreachBatch satisfies the sink's
+    * offline-compaction contract by construction — micro-batches are
+    * serialized, so a compaction never races an append.
     */
   def nearDupAvailableNow(
       docs: DataFrame,
@@ -165,8 +151,7 @@ object StreamingVectorDedup {
       idCol: String,
       checkpoint: String,
       onSurvivors: (DataFrame, Long) => Unit,
-      compactEvery: Int = 0,
-      filesPerBand: Int = 1
+      compactEvery: Int = 0
   ): org.apache.spark.sql.streaming.StreamingQuery = {
     require(compactEvery >= 0, s"compactEvery must be >= 0: $compactEvery")
     docs.writeStream
@@ -176,7 +161,7 @@ object StreamingVectorDedup {
         onSurvivors(index.dedupeBatch(batch, vecCol, idCol, Some(batchId)),
           batchId)
         if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
-          index.compact(batch.sparkSession, filesPerBand)
+          index.compact(batch.sparkSession)
       }
       .start()
   }

@@ -55,9 +55,9 @@ class CcnetPipelineSpec extends SparkSuite {
       val reg = new ParagraphRegistry(root.toString + "/ix", buckets = 4)
       val docs = corpus(40)
       val b1 = CcnetPipeline.run(spark, docs.where(col("doc_id") < 20),
-        CcnetPipeline.Config(dedup = CcnetPipeline.Incremental(reg, Some(0L))))
+        CcnetPipeline.Config(dedup = CcnetPipeline.Incremental(reg, 0L)))
       val b2 = CcnetPipeline.run(spark, docs.where(col("doc_id") >= 20),
-        CcnetPipeline.Config(dedup = CcnetPipeline.Incremental(reg, Some(1L))))
+        CcnetPipeline.Config(dedup = CcnetPipeline.Incremental(reg, 1L)))
       val inc = b1.classified.unionByName(b2.classified)
         .select(concat_ws(":", col("doc_id"), col("lang"), md5(col("text"))))
         .as[String].collect().sorted

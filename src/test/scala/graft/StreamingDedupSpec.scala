@@ -46,7 +46,7 @@ class StreamingDedupSpec extends SparkSuite {
       (10L, mut(doc, "alpha")), (11L, mut(doc, "beta")),
       (20L, "completely different content about spark catalyst optimizer rules " * 8))
       .toDF("doc_id", "text")
-    val s1 = ix.dedupeBatch(b1, "text", "doc_id")
+    val s1 = ix.dedupeBatch(b1, "text", "doc_id", Some(0L))
     assert(s1.select("doc_id").as[Long].collect().sorted.toSeq === Seq(10L, 20L))
 
     // batch 2: A'' (near-dup of indexed A) dropped; C (new) kept
@@ -54,11 +54,11 @@ class StreamingDedupSpec extends SparkSuite {
       (30L, mut(doc, "gamma")),
       (40L, "yet another unrelated corpus document mentioning shuffle partitions " * 8))
       .toDF("doc_id", "text")
-    val s2 = ix.dedupeBatch(b2, "text", "doc_id")
+    val s2 = ix.dedupeBatch(b2, "text", "doc_id", Some(1L))
     assert(s2.select("doc_id").as[Long].collect().sorted.toSeq === Seq(40L))
 
     // index holds exactly the survivors' band rows, partitioned by band
-    val ixDf = spark.read.parquet(dir)
+    val ixDf = ix.store.read(spark)
     assert(ixDf.select("id").distinct().as[Long].collect().sorted.toSeq ===
       Seq(10L, 20L, 40L))
     assert(ixDf.groupBy("id").count().select("count").distinct().as[Long].head() === 16L)
@@ -78,8 +78,8 @@ class StreamingDedupSpec extends SparkSuite {
 
     val dir = Files.createTempDirectory("lsh_index2").toString + "/ix"
     val ix = new StreamingDedup.LshIndex(dir)
-    val s1 = ix.dedupeBatch(docs.take(2).toDF("doc_id", "text"), "text", "doc_id")
-    val s2 = ix.dedupeBatch(docs.drop(2).toDF("doc_id", "text"), "text", "doc_id")
+    val s1 = ix.dedupeBatch(docs.take(2).toDF("doc_id", "text"), "text", "doc_id", Some(0L))
+    val s2 = ix.dedupeBatch(docs.drop(2).toDF("doc_id", "text"), "text", "doc_id", Some(1L))
     val kept = (s1.select("doc_id").as[Long].collect() ++
       s2.select("doc_id").as[Long].collect()).sorted.toSeq
     assert(kept === Seq(1L, 3L))  // 2 dropped in-batch, 4 dropped vs index
@@ -149,9 +149,9 @@ class StreamingDedupSpec extends SparkSuite {
     // several small appends -> many files
     (0 until 4).foreach { b =>
       ix.dedupeBatch(Seq((b * 10L, s"unique content batch $b " + ("filler words " * 20)))
-        .toDF("doc_id", "text"), "text", "doc_id")
+        .toDF("doc_id", "text"), "text", "doc_id", Some(b.toLong))
     }
-    val before = spark.read.parquet(dir)
+    val before = ix.store.read(spark)
     val rowsBefore = before.orderBy("id", "band").collect().toSeq
     def fileCount = {
       val p = java.nio.file.Paths.get(dir)
@@ -160,12 +160,12 @@ class StreamingDedupSpec extends SparkSuite {
     val filesBefore = fileCount
     ix.compact(spark)
     assert(fileCount < filesBefore)
-    assert(spark.read.parquet(dir).orderBy("id", "band").collect().toSeq === rowsBefore)
+    assert(ix.store.read(spark).orderBy("id", "band").collect().toSeq === rowsBefore)
     // post-compaction, probing still finds indexed docs
     val s = ix.dedupeBatch(
       Seq((99L, "unique content batch 2 " + ("filler words " * 20)),
           (98L, "brand new text never indexed " * 10)).toDF("doc_id", "text"),
-      "text", "doc_id")
+      "text", "doc_id", None)
     assert(s.select("doc_id").as[Long].collect().toSeq === Seq(98L))
   }
 
@@ -175,41 +175,45 @@ class StreamingDedupSpec extends SparkSuite {
     val b = Seq((1L, mut(doc, "aa")),
       (3L, "entirely distinct prose about state stores " * 8)).toDF("doc_id", "text")
     ix.dedupeBatch(b, "text", "doc_id", batchId = Some(5L))
-    val rows = spark.read.parquet(dir).orderBy("id", "band").collect().toSeq
+    val rows = ix.store.read(spark).orderBy("id", "band").collect().toSeq
+    def probeDrops() = ix.dedupeBatch(
+      Seq((9L, mut(doc, "zz"))).toDF("doc_id", "text"), "text", "doc_id", None)
+      .count() === 0
+    def exists(rel: String) = new java.io.File(s"$dir/$rel").exists()
 
-    def move(from: String, to: String) = {
-      assert(new java.io.File(from).renameTo(new java.io.File(to)))
-    }
-    // window 1: crash during write-new — stale __compacting beside a
-    // healthy index. The index is readable the whole time.
-    val tmp = dir + "__compacting"
-    spark.read.parquet(dir).limit(1).write.parquet(tmp)
-    assert(spark.read.parquet(dir).count() === rows.size)
+    // window 1: the compaction dir was written but its `_compacted/<w>`
+    // marker never landed. Probes see the old generation (the batch dir),
+    // and the next compact succeeds.
+    ix.store.read(spark).write.partitionBy("band").parquet(s"$dir/compact/upto=5")
+    assert(ix.store.compactionWatermark(spark).isEmpty)
+    assert(ix.store.read(spark).orderBy("id", "band").collect().toSeq === rows)
+    assert(probeDrops())
     ix.compact(spark)
-    assert(!new java.io.File(tmp).exists())
-    assert(spark.read.parquet(dir).orderBy("id", "band").collect().toSeq === rows)
+    assert(ix.store.compactionWatermark(spark) === Some(5L))
+    assert(!exists("data/batch=5"))
+    assert(ix.store.read(spark).orderBy("id", "band").collect().toSeq === rows)
 
-    // window 2: torn swap — the index was moved aside but the new files
-    // never renamed in (dir missing, __old holding the data). The next
-    // compact must roll the swap back, not treat the corpus as empty.
-    move(dir, dir + "__old")
+    // window 2: the marker exists but the sweep never ran — a committed
+    // batch dir at or below the watermark lingers. Probes are unchanged
+    // (the reader stops at the watermark), and the next compact sweeps.
+    ix.dedupeBatch(Seq((20L, "a second batch about watermark folding " * 8))
+      .toDF("doc_id", "text"), "text", "doc_id", Some(6L))
+    val rows2 = ix.store.read(spark).orderBy("id", "band").collect().toSeq
+    ix.store.read(spark).write.partitionBy("band").parquet(s"$dir/compact/upto=6")
+    new java.io.File(s"$dir/_compacted/6").createNewFile()
+    assert(exists("data/batch=6") && exists("compact/upto=5"))
+    assert(ix.store.read(spark).orderBy("id", "band").collect().toSeq === rows2)
+    assert(probeDrops())
+    ix.dedupeBatch(Seq((30L, "a third batch arriving after the torn sweep " * 8))
+      .toDF("doc_id", "text"), "text", "doc_id", Some(7L))
+    val rows3 = ix.store.read(spark).orderBy("id", "band").collect().toSeq
     ix.compact(spark)
-    assert(spark.read.parquet(dir).orderBy("id", "band").collect().toSeq === rows)
-    assert(!new java.io.File(dir + "__old").exists())
-
-    // window 3: swap completed but cleanup crashed — __old remnant with
-    // the unmoved batch ledger. compact rescues the ledger then cleans.
-    new java.io.File(dir + "__old").mkdirs()
-    move(dir + "/_batches", dir + "__old/_batches")
-    ix.compact(spark)
-    assert(!new java.io.File(dir + "__old").exists())
-    assert(new java.io.File(dir + "/_batches/5").exists())
-    // re-delivery of batch 5 is still skipped (no double append)
+    assert(!exists("data/batch=6") && !exists("compact/upto=5") && !exists("compact/upto=6"))
+    assert(ix.store.read(spark).orderBy("id", "band").collect().toSeq === rows3)
+    // re-delivery of a compacted batch id is still skipped (no double append)
     ix.dedupeBatch(b, "text", "doc_id", batchId = Some(5L))
-    assert(spark.read.parquet(dir).count() === rows.size)
-    // and the recovered index still catches near-dups
-    assert(ix.dedupeBatch(Seq((9L, mut(doc, "zz"))).toDF("doc_id", "text"),
-      "text", "doc_id").count() === 0)
+    assert(ix.store.read(spark).count() === rows3.size)
+    assert(probeDrops())
   }
 
   test("re-delivered batch yields identical survivors and no double-indexing") {
@@ -226,49 +230,55 @@ class StreamingDedupSpec extends SparkSuite {
     val retry = ix.dedupeBatch(b, "text", "doc_id", batchId = Some(42L))
       .select("doc_id").as[Long].collect().sorted.toSeq
     assert(retry === first)
-    val perId = spark.read.parquet(dir).groupBy("id").count()
+    val perId = ix.store.read(spark).groupBy("id").count()
       .select("count").distinct().as[Long].collect().toSeq
     assert(perId === Seq(16L))   // one band-row set per doc, no dups
   }
 
   test("an all-filtered first batch leaves no unreadable index behind") {
-    // Every row lacks a usable signature (nothing to shingle): nothing may
-    // be appended (an empty partitioned write leaves a data-less
-    // `_SUCCESS`-only dir the next batch cannot read), but the batch
-    // marker still commits.
+    // Every row lacks a usable signature (nothing to shingle): the batch
+    // commits a 0-row append (a `_SUCCESS`-only dir the store's reader
+    // skips), and the next batch's probe must still work.
     val dir = Files.createTempDirectory("lsh_empty").toString + "/ix"
     val ix = new StreamingDedup.LshIndex(dir)
     val empty = Seq((900L, ""), (901L, "")).toDF("doc_id", "text")
     val out = ix.dedupeBatch(empty, "text", "doc_id", batchId = Some(3L))
     assert(out.count() === 2)  // signature-less rows pass through undeduped
-    assert(new java.io.File(dir + "/_batches/3").exists())
+    assert(ix.store.committed(spark, 3L))
     // the next REAL batch must work (this read crashed pre-fix)
     val s = ix.dedupeBatch(
       Seq((1L, mut(doc, "aa")),
           (2L, "entirely distinct prose about state stores " * 8))
-        .toDF("doc_id", "text"), "text", "doc_id")
+        .toDF("doc_id", "text"), "text", "doc_id", Some(4L))
     assert(s.count() === 2)
   }
 
-  test("crash between append and marker: re-delivery duplicates are output-invisible and compact scrubs them") {
-    // Simulate a crash AFTER the survivors' append committed but BEFORE
-    // the batch marker was created (the documented at-least-once window):
-    // run the batch, delete its marker, re-deliver.
+  test("crash between append and marker: re-delivery appends exactly once") {
+    // Simulate a crash AFTER the survivors' write but BEFORE the batch's
+    // `_committed` marker: run the batch, delete its marker, re-deliver.
+    // The retry overwrites the batch's own directory — no duplicates.
     val dir = Files.createTempDirectory("lsh_crash").toString + "/ix"
     val ix = new StreamingDedup.LshIndex(dir)
     val b = Seq((1L, mut(doc, "aa")),
       (3L, "entirely distinct prose about state stores " * 8)).toDF("doc_id", "text")
     val n1 = ix.dedupeBatch(b, "text", "doc_id", batchId = Some(1L)).count()
-    val rows1 = spark.read.parquet(dir).count()
-    assert(new java.io.File(dir + "/_batches/1").delete())  // the "crash"
+    val rows1 = ix.store.read(spark).count()
+    assert(new java.io.File(dir + "/_committed/1").delete())  // the "crash"
     val n2 = ix.dedupeBatch(b, "text", "doc_id", batchId = Some(1L)).count()
-    assert(n2 === n1)                                       // output identical
-    assert(spark.read.parquet(dir).count() === 2 * rows1)   // bloat, not corruption
-    ix.compact(spark)
-    assert(spark.read.parquet(dir).count() === rows1)       // duplicates scrubbed
-    // the deduplicated index still catches near-dups of indexed docs
+    assert(n2 === n1)                                         // output identical
+    assert(ix.store.read(spark).count() === rows1)            // no duplicate rows
+    // the index still catches near-dups of indexed docs
     assert(ix.dedupeBatch(Seq((9L, mut(doc, "bb"))).toDF("doc_id", "text"),
-      "text", "doc_id").count() === 0)
+      "text", "doc_id", None).count() === 0)
+  }
+
+  test("a None probe writes nothing under the index dir") {
+    val dir = Files.createTempDirectory("lsh_probe").toString + "/ix"
+    val ix = new StreamingDedup.LshIndex(dir)
+    val out = ix.dedupeBatch(Seq((1L, mut(doc, "aa")), (2L, mut(doc, "bb")))
+      .toDF("doc_id", "text"), "text", "doc_id", None)
+    assert(out.select("doc_id").as[Long].collect().toSeq === Seq(1L))
+    assert(!new java.io.File(dir).exists())
   }
 
   test("no forced broadcast: dedup stays correct when broadcast joins are disabled") {
@@ -283,9 +293,9 @@ class StreamingDedupSpec extends SparkSuite {
       val s1 = ix.dedupeBatch(
         Seq((1L, mut(doc, "aa")), (2L, mut(doc, "bb")),
             (3L, "entirely distinct prose about state stores " * 8))
-          .toDF("doc_id", "text"), "text", "doc_id")
+          .toDF("doc_id", "text"), "text", "doc_id", Some(0L))
       val s2 = ix.dedupeBatch(
-        Seq((9L, mut(doc, "cc"))).toDF("doc_id", "text"), "text", "doc_id")
+        Seq((9L, mut(doc, "cc"))).toDF("doc_id", "text"), "text", "doc_id", Some(1L))
       assert(s1.select("doc_id").as[Long].collect().sorted.toSeq === Seq(1L, 3L))
       assert(s2.count() === 0)
       assert(s2.queryExecution.analyzed.toString.indexOf("ResolvedHint") === -1)
@@ -348,15 +358,18 @@ class StreamingDedupSpec extends SparkSuite {
     // 100 survives its batch, 110 is a near-dup of the indexed 100
     // (the compaction must not lose registry rows), 120 is new
     assert(survivors.sorted === List(100L, 102L, 120L))
-    // compaction actually ran: one file per band partition
-    val bandDirs = new java.io.File(dir).listFiles()
+    // compaction actually ran: one compaction generation, one file per
+    // band partition, and the folded batch dirs are gone
+    assert(ix.store.compactionWatermark(spark) === Some(2L))
+    assert(!new java.io.File(s"$dir/data/batch=0").exists())
+    val bandDirs = new java.io.File(s"$dir/compact/upto=2").listFiles()
       .filter(_.getName.startsWith("band="))
     assert(bandDirs.nonEmpty)
     assert(bandDirs.forall(
       _.listFiles().count(f => f.getName.endsWith(".parquet")) == 1),
-      "band partitions not compacted to filesPerBand files")
-    // restart with no new files: nothing re-processes (ledger + file
-    // checkpoint both survived the swap)
+      "band partitions not compacted to one file each")
+    // restart with no new files: nothing re-processes (`_committed`
+    // markers + file checkpoint both survived the compaction)
     run()
     assert(survivors.sorted === List(100L, 102L, 120L))
     // post-compaction arrival (id 3, no compact: (3+1) % 3 != 0):

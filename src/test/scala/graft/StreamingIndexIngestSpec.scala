@@ -113,11 +113,11 @@ class StreamingIndexIngestSpec extends SparkSuite {
     assert(survivors.toSet === Set(1L, 2L, 4L))
     val fsys = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI("file:///"), spark.sparkContext.hadoopConfiguration)
-    assert(fsys.exists(new org.apache.hadoop.fs.Path(s"$root/_batches/1")),
-      "batch ledger missing")
-    // the mid-drain compact left the index readable and scrubbed: the
-    // indexed ids are exactly the survivors
-    val indexed = spark.read.parquet(root).select("id").distinct()
+    assert(fsys.exists(new org.apache.hadoop.fs.Path(s"$root/_committed/1")),
+      "batch marker missing")
+    // the mid-drain compact left the index readable: the indexed ids are
+    // exactly the survivors
+    val indexed = ix.store.read(spark).select("id").distinct()
       .as[Long].collect().toSet
     assert(indexed === Set(1L, 2L, 4L), indexed.toString)
     // restart with no new files: nothing re-drains, nothing re-indexes
@@ -129,7 +129,7 @@ class StreamingIndexIngestSpec extends SparkSuite {
       .coalesce(1).write.parquet(s"$landing/p3")
     drain()
     assert(survivors.toSet === Set(7L), survivors.toString)
-    val indexed2 = spark.read.parquet(root).select("id").distinct()
+    val indexed2 = ix.store.read(spark).select("id").distinct()
       .as[Long].collect().toSet
     assert(indexed2 === Set(1L, 2L, 4L, 7L), indexed2.toString)
   }

@@ -64,12 +64,41 @@ class StreamingParagraphDedupSpec extends SparkSuite {
       .toDF("doc_id", "lang", "text")
     val first = ix.dedupeBatch(b1, "text", "doc_id", "lang", Some(0L))
       .as[(Long, String, String)].collect().toSet
-    val rows = spark.read.parquet(dir).count()
+    val rows = ix.store.read(spark).count()
     val again = ix.dedupeBatch(b1, "text", "doc_id", "lang", Some(0L))
       .as[(Long, String, String)].collect().toSet
     assert(again === first)
-    assert(spark.read.parquet(dir).count() === rows, "registry grew on re-delivery")
+    assert(ix.store.read(spark).count() === rows, "registry grew on re-delivery")
     assert(first === Set((1L, "en", s"one one\n\n$B"), (2L, "en", "two two")))
+  }
+
+  test("crash between append and marker: re-delivery appends exactly once") {
+    // Simulate a crash AFTER the winners' write but BEFORE the batch's
+    // `_committed` marker: run the batch, delete its marker, re-deliver.
+    // The retry overwrites the batch's own directory — no duplicates.
+    val dir = freshDir()
+    val ix = new ParagraphRegistry(dir)
+    val b1 = Seq((1L, "en", s"one one\n\n$B"), (2L, "en", s"$B\n\ntwo two"))
+      .toDF("doc_id", "lang", "text")
+    val first = ix.dedupeBatch(b1, "text", "doc_id", "lang", Some(1L))
+      .as[(Long, String, String)].collect().toSet
+    val rows1 = ix.store.read(spark).count()
+    assert(new java.io.File(dir + "/_committed/1").delete())  // the "crash"
+    val again = ix.dedupeBatch(b1, "text", "doc_id", "lang", Some(1L))
+      .as[(Long, String, String)].collect().toSet
+    assert(again === first)                                   // output identical
+    assert(ix.store.read(spark).count() === rows1)            // no duplicate rows
+  }
+
+  test("a None probe writes nothing under the registry dir") {
+    val dir = freshDir()
+    val ix = new ParagraphRegistry(dir)
+    val b = Seq((1L, "en", s"one one\n\n$B"), (2L, "en", s"$B\n\ntwo two"))
+      .toDF("doc_id", "lang", "text")
+    val out = ix.dedupeBatch(b, "text", "doc_id", "lang", None)
+      .as[(Long, String, String)].collect().toSet
+    assert(out === Set((1L, "en", s"one one\n\n$B"), (2L, "en", "two two")))
+    assert(!new java.io.File(dir).exists())
   }
 
   test("compaction mid-stream scrubs and the registry keeps deduping after") {

@@ -34,8 +34,8 @@ class StreamingVectorDedupSpec extends SparkSuite {
   test("planted near-copies drop across batches; originals survive") {
     val ix = new VectorBandIndex(freshDir(), bandBits = 8, bands = 16, threshold = 0.9)
     val docs = corpus
-    val s1 = ix.dedupeBatch(docs.where(col("vec_id") < 50), "embedding", "vec_id")
-    val s2 = ix.dedupeBatch(docs.where(col("vec_id") >= 50), "embedding", "vec_id")
+    val s1 = ix.dedupeBatch(docs.where(col("vec_id") < 50), "embedding", "vec_id", Some(0L))
+    val s2 = ix.dedupeBatch(docs.where(col("vec_id") >= 50), "embedding", "vec_id", Some(1L))
     assert(s1.count() === 30)                       // no dups among bases
     assert(s2.count() === 0)                        // every copy caught by the index
     val ids = s1.select("vec_id").as[Long].collect().toSet
@@ -46,12 +46,12 @@ class StreamingVectorDedupSpec extends SparkSuite {
     val docs = corpus
     val inc = {
       val ix = new VectorBandIndex(freshDir(), threshold = 0.9)
-      val s1 = ix.dedupeBatch(docs.where(col("vec_id") <= 15), "embedding", "vec_id")
-      val s2 = ix.dedupeBatch(docs.where(col("vec_id") > 15), "embedding", "vec_id")
+      val s1 = ix.dedupeBatch(docs.where(col("vec_id") <= 15), "embedding", "vec_id", Some(0L))
+      val s2 = ix.dedupeBatch(docs.where(col("vec_id") > 15), "embedding", "vec_id", Some(1L))
       s1.select("vec_id").union(s2.select("vec_id")).as[Long].collect().toSet
     }
     val oneShot = new VectorBandIndex(freshDir(), threshold = 0.9)
-      .dedupeBatch(docs, "embedding", "vec_id", appendToIndex = false)
+      .dedupeBatch(docs, "embedding", "vec_id", None)
       .select("vec_id").as[Long].collect().toSet
     assert(inc === oneShot)
   }
@@ -63,12 +63,12 @@ class StreamingVectorDedupSpec extends SparkSuite {
     val first = ix.dedupeBatch(docs.where(col("vec_id") < 50), "embedding", "vec_id",
       batchId = Some(1L))
     val n1 = first.count()
-    val ixRows = spark.read.parquet(dir).count()
+    val ixRows = ix.store.read(spark).count()
     // at-least-once re-delivery of the SAME batch id
     val again = ix.dedupeBatch(docs.where(col("vec_id") < 50), "embedding", "vec_id",
       batchId = Some(1L))
     assert(again.count() === n1)                    // identical output
-    assert(spark.read.parquet(dir).count() === ixRows)  // no double append
+    assert(ix.store.read(spark).count() === ixRows)  // no double append
   }
 
   test("compact preserves content and dedup behavior; markers survive") {
@@ -77,49 +77,50 @@ class StreamingVectorDedupSpec extends SparkSuite {
     val docs = corpus
     ix.dedupeBatch(docs.where(col("vec_id") < 50), "embedding", "vec_id",
       batchId = Some(7L))
-    val before = spark.read.parquet(dir).count()
-    ix.compact(spark, filesPerBand = 1)
-    assert(spark.read.parquet(dir).count() === before)
+    val before = ix.store.read(spark).count()
+    ix.compact(spark)
+    assert(ix.store.compactionWatermark(spark) === Some(7L))
+    assert(ix.store.read(spark).count() === before)
     // the planted copies are still caught by the compacted index
-    assert(ix.dedupeBatch(docs.where(col("vec_id") >= 50), "embedding", "vec_id")
+    assert(ix.dedupeBatch(docs.where(col("vec_id") >= 50), "embedding", "vec_id", None)
       .count() === 0)
-    // the batch ledger survived the swap (re-delivery still skipped)
-    assert(new java.io.File(dir + "/_batches/7").exists())
+    // the batch marker survived the compaction (re-delivery still skipped)
+    assert(ix.store.committed(spark, 7L))
+    ix.dedupeBatch(docs.where(col("vec_id") < 50), "embedding", "vec_id", Some(7L))
+    assert(ix.store.read(spark).count() === before)
   }
 
   test("an all-filtered first batch leaves no unreadable index behind") {
-    // Every row lacks a usable vector: nothing may be appended (an empty
-    // partitioned write leaves a data-less `_SUCCESS`-only dir the next
-    // batch cannot read), but the batch marker still commits.
+    // Every row lacks a usable vector: the batch commits a 0-row append
+    // (a `_SUCCESS`-only dir the store's reader skips), and the next
+    // batch's probe must still work.
     val dir = freshDir()
     val ix = new VectorBandIndex(dir, threshold = 0.9)
     val empty = Seq((900L, Array.empty[Float]), (901L, Array.empty[Float]))
       .toDF("vec_id", "embedding")
     val out = ix.dedupeBatch(empty, "embedding", "vec_id", batchId = Some(3L))
     assert(out.count() === 2)  // vector-less rows pass through undeduped
-    assert(new java.io.File(dir + "/_batches/3").exists())
+    assert(ix.store.committed(spark, 3L))
     // the next REAL batch must work (this read crashed pre-fix)
-    val s = ix.dedupeBatch(corpus.where(col("vec_id") < 50), "embedding", "vec_id")
+    val s = ix.dedupeBatch(corpus.where(col("vec_id") < 50), "embedding", "vec_id", Some(4L))
     assert(s.count() === 30)
   }
 
-  test("crash between append and marker: re-delivery duplicates are output-invisible and compact scrubs them") {
-    // Simulate a crash AFTER the survivors' append committed but BEFORE
-    // the batch marker was created (the documented at-least-once window):
-    // run the batch, delete its marker, re-deliver.
+  test("crash between append and marker: re-delivery appends exactly once") {
+    // Simulate a crash AFTER the survivors' write but BEFORE the batch's
+    // `_committed` marker: run the batch, delete its marker, re-deliver.
+    // The retry overwrites the batch's own directory — no duplicates.
     val dir = freshDir()
     val ix = new VectorBandIndex(dir, threshold = 0.9)
     val bases = corpus.where(col("vec_id") < 50)
     val n1 = ix.dedupeBatch(bases, "embedding", "vec_id", batchId = Some(1L)).count()
-    val rows1 = spark.read.parquet(dir).count()
-    assert(new java.io.File(dir + "/_batches/1").delete())  // the "crash"
+    val rows1 = ix.store.read(spark).count()
+    assert(new java.io.File(dir + "/_committed/1").delete())  // the "crash"
     val n2 = ix.dedupeBatch(bases, "embedding", "vec_id", batchId = Some(1L)).count()
-    assert(n2 === n1)                                       // output identical
-    assert(spark.read.parquet(dir).count() === 2 * rows1)   // bloat, not corruption
-    ix.compact(spark)
-    assert(spark.read.parquet(dir).count() === rows1)       // duplicates scrubbed
-    // the deduplicated index still catches the planted copies
-    assert(ix.dedupeBatch(corpus.where(col("vec_id") >= 50), "embedding", "vec_id")
+    assert(n2 === n1)                                         // output identical
+    assert(ix.store.read(spark).count() === rows1)            // no duplicate rows
+    // the index still catches the planted copies
+    assert(ix.dedupeBatch(corpus.where(col("vec_id") >= 50), "embedding", "vec_id", None)
       .count() === 0)
   }
 
@@ -128,35 +129,43 @@ class StreamingVectorDedupSpec extends SparkSuite {
     val ix = new VectorBandIndex(dir, threshold = 0.9)
     ix.dedupeBatch(corpus.where(col("vec_id") < 50), "embedding", "vec_id",
       batchId = Some(5L))
-    val rows = spark.read.parquet(dir).count()
+    val rows = ix.store.read(spark).count()
+    def copiesDrop() = ix.dedupeBatch(corpus.where(col("vec_id") >= 50),
+      "embedding", "vec_id", None).count() === 0
+    def exists(rel: String) = new java.io.File(s"$dir/$rel").exists()
 
-    def move(from: String, to: String) =
-      assert(new java.io.File(from).renameTo(new java.io.File(to)))
-    // window 1: crash during write-new — stale __compacting beside a
-    // healthy index; the index is readable the whole time.
-    val tmp = dir + "__compacting"
-    spark.read.parquet(dir).limit(1).write.parquet(tmp)
+    // window 1: the compaction dir was written but its `_compacted/<w>`
+    // marker never landed. Probes see the old generation (the batch dir),
+    // and the next compact succeeds.
+    ix.store.read(spark).write.partitionBy("band").parquet(s"$dir/compact/upto=5")
+    assert(ix.store.compactionWatermark(spark).isEmpty)
+    assert(ix.store.read(spark).count() === rows)
+    assert(copiesDrop())
     ix.compact(spark)
-    assert(!new java.io.File(tmp).exists())
-    assert(spark.read.parquet(dir).count() === rows)
+    assert(ix.store.compactionWatermark(spark) === Some(5L))
+    assert(!exists("data/batch=5"))
+    assert(ix.store.read(spark).count() === rows)
 
-    // window 2: torn swap — dir missing, __old holding the data. The
-    // next compact must roll the swap back, not treat the corpus as empty.
-    move(dir, dir + "__old")
+    // window 2: the marker exists but the sweep never ran — a committed
+    // batch dir at or below the watermark lingers. Probes are unchanged
+    // (the reader stops at the watermark), and the next compact (after
+    // the next batch) sweeps.
+    def fresh(id: Long, seed: Int) = Seq((id,
+      Array.fill(16)(new scala.util.Random(seed).nextGaussian().toFloat)))
+      .toDF("vec_id", "embedding")
+    assert(ix.dedupeBatch(fresh(200L, 5003), "embedding", "vec_id", Some(6L)).count() === 1)
+    val rows2 = ix.store.read(spark).count()
+    ix.store.read(spark).write.partitionBy("band").parquet(s"$dir/compact/upto=6")
+    new java.io.File(s"$dir/_compacted/6").createNewFile()
+    assert(exists("data/batch=6") && exists("compact/upto=5"))
+    assert(ix.store.read(spark).count() === rows2)
+    assert(copiesDrop())
+    assert(ix.dedupeBatch(fresh(201L, 90001), "embedding", "vec_id", Some(7L)).count() === 1)
+    val rows3 = ix.store.read(spark).count()
     ix.compact(spark)
-    assert(spark.read.parquet(dir).count() === rows)
-    assert(!new java.io.File(dir + "__old").exists())
-
-    // window 3: swap completed but cleanup crashed — __old remnant with
-    // the unmoved batch ledger. compact rescues the ledger then cleans.
-    new java.io.File(dir + "__old").mkdirs()
-    move(dir + "/_batches", dir + "__old/_batches")
-    ix.compact(spark)
-    assert(!new java.io.File(dir + "__old").exists())
-    assert(new java.io.File(dir + "/_batches/5").exists())
-    // the recovered index still catches the planted copies
-    assert(ix.dedupeBatch(corpus.where(col("vec_id") >= 50), "embedding", "vec_id")
-      .count() === 0)
+    assert(!exists("data/batch=6") && !exists("compact/upto=5") && !exists("compact/upto=6"))
+    assert(ix.store.read(spark).count() === rows3)
+    assert(copiesDrop())
   }
 
   test("no forced broadcast: dedup stays correct when broadcast joins are disabled") {
@@ -168,8 +177,8 @@ class StreamingVectorDedupSpec extends SparkSuite {
     try {
       val ix = new VectorBandIndex(freshDir(), threshold = 0.9)
       val docs = corpus
-      val s1 = ix.dedupeBatch(docs.where(col("vec_id") < 50), "embedding", "vec_id")
-      val s2 = ix.dedupeBatch(docs.where(col("vec_id") >= 50), "embedding", "vec_id")
+      val s1 = ix.dedupeBatch(docs.where(col("vec_id") < 50), "embedding", "vec_id", Some(0L))
+      val s2 = ix.dedupeBatch(docs.where(col("vec_id") >= 50), "embedding", "vec_id", Some(1L))
       assert(s1.count() === 30 && s2.count() === 0)
       assert(s2.queryExecution.analyzed.toString.indexOf("ResolvedHint") === -1)
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
@@ -178,8 +187,8 @@ class StreamingVectorDedupSpec extends SparkSuite {
   test("index layout is band-partitioned (probe-prunable)") {
     val dir = freshDir()
     val ix = new VectorBandIndex(dir, bandBits = 4, bands = 4, threshold = 0.9)
-    ix.dedupeBatch(corpus, "embedding", "vec_id")
-    val parts = new java.io.File(dir).listFiles()
+    ix.dedupeBatch(corpus, "embedding", "vec_id", Some(0L))
+    val parts = new java.io.File(s"$dir/data/batch=0").listFiles()
       .filter(_.getName.startsWith("band=")).map(_.getName).toSet
     assert(parts.nonEmpty && parts.forall(_.matches("band=\\d+")))
   }
@@ -211,7 +220,8 @@ class StreamingVectorDedupSpec extends SparkSuite {
     // all 30 bases survive; every planted copy drops against the index
     assert(survivors.sorted === (0L until 30L).toList)
     // compaction ran: each band partition folded to one file
-    val bandDirs = new java.io.File(dir).listFiles()
+    assert(ix.store.compactionWatermark(spark) === Some(1L))
+    val bandDirs = new java.io.File(s"$dir/compact/upto=1").listFiles()
       .filter(_.getName.startsWith("band="))
     assert(bandDirs.nonEmpty)
     assert(bandDirs.forall(

@@ -2,10 +2,19 @@ package graft.load
 
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
-import graft.SparkSuite
+import graft.{MainSources, SparkSuite}
 
 class IdempotentParquetSinkSpec extends SparkSuite {
   import spark.implicits._
+
+  test("source guard: per-batch appends go through graft/load only; no `_batches` ledgers") {
+    val load = MainSources.root.resolve("graft/load")
+    assert(MainSources.files.exists(_.startsWith(load)))
+    val appends = MainSources.matchesOutside("""mode\("append"\)""".r)(_.startsWith(load))
+    assert(appends.isEmpty, appends.mkString("\n"))
+    val ledgers = MainSources.matchesOutside("_batches".r)(_ => false)
+    assert(ledgers.isEmpty, ledgers.mkString("\n"))
+  }
 
   test("batch retries do not duplicate rows; partial writes stay invisible") {
     val sink = new IdempotentParquetSink(
